@@ -1,124 +1,101 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Range}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.scheduler.graftaccess.Jobs
+import org.apache.spark.sql.graftaccess.PlanDatasets
 
-/** ANALYZED-LOGICAL-PLAN memo for pure query constructions — the r17
-  * attack on the per-statement orchestration floor (guide §1.2 "driver
-  * time"): every bench/serving pass re-built each query's DataFrame from
-  * scratch, and each of the dozens of chained Dataset operations inside a
-  * build re-runs Catalyst ANALYSIS over its whole growing subtree —
-  * ~60–300 ms of driver time per statement, ~O(depth²) in plan size,
-  * paid per pass for byte-identical statements.
+/** ANALYZED-LOGICAL-PLAN memo for pure query constructions. Each of the
+  * dozens of chained Dataset operations inside a build re-runs Catalyst
+  * analysis over its whole growing subtree (~O(depth²) in plan size), so
+  * re-building a byte-identical statement on every pass costs tens to
+  * hundreds of ms of driver time per query.
   *
-  * The memo caches the ANALYZED LOGICAL PLAN only — plans, never results:
+  * The memo caches the analyzed logical plan only — plans, never results:
   * a hit wraps the cached plan in a FRESH Dataset/QueryExecution
-  * ([[org.apache.spark.sql.graftaccess.PlanDatasets.ofRows]]), so
-  * optimization, physical planning, codegen, shuffles and every byte of
-  * execution re-run from the parquet inputs on every action. (Re-using
-  * the same Dataset OBJECT would silently reuse its shuffle outputs
-  * across bench passes — result caching, exactly what this memo must
+  * ([[PlanDatasets.ofRows]]), so optimization, physical planning, codegen,
+  * shuffles and every byte of execution re-run from the parquet inputs on
+  * every action. (Re-using the same Dataset OBJECT would reuse its
+  * shuffle outputs across passes — result caching, which this memo must
   * never do.)
   *
-  * SAFETY CONTRACT (enforced by PlanMemoSpec over the live catalog, and
-  * re-derivable any time with `graft.tools.PurityScan`): a query is in
-  * [[memoized]] only if its build
-  *   1. starts ZERO Spark jobs — no collect/count/write/checkpoint, so a
-  *      memo hit skips nothing but plan re-construction; and
-  *   2. yields a plan whose every leaf is a store-parquet relation under
-  *      sfDir, a literal LocalRelation, or a Range — the plan is a pure
+  * PURITY is decided per build, when a miss fills the cache. The plan is
+  * stored only if
+  *   1. the build started ZERO Spark jobs — no collect/count/write/
+  *      checkpoint, so a hit skips nothing but plan construction; and
+  *   2. every leaf of the analyzed plan (subqueries included) is a parquet
+  *      relation under sfDir, a LocalRelation or a Range — the plan is a
   *      function of (code, session, store), so keying on the store's
-  *      CONTENT identity is sound.
-  * Everything else (artifact pipelines, CC/training loops, checkpoint
-  * chains) bypasses the memo unconditionally.
+  *      content identity is sound.
+  * A build that fails either test is returned as built and not stored;
+  * the next run builds again. Cold builds start schema-inference jobs, so
+  * the first build over a cold table is never stored, and the next warm
+  * one is. A query that is pure at one store size and eager at another is
+  * classified at each.
+  *
+  * The job count comes from the DAGScheduler's job-id counter
+  * ([[Jobs.submitted]]), which `submitJob` advances on the submitting
+  * thread before the job runs. A listener-bus count is delivered
+  * asynchronously and can lag the build; that undercount would store a
+  * build that did real work. Jobs started concurrently by other threads
+  * only overcount, which skips the memo for that build.
   *
   * Keys carry session identity (plans hold session-bound relation
   * instances), query name, and the store's recursive content identity
-  * ([[Tables.fileIdent]] — entry names+lengths+mtimes all the way down),
-  * so an in-place rewrite of any table file misses. Non-local stores skip
-  * the memo. Bounded like every r16 metadata memo.
+  * ([[Tables.fileIdent]]), so an in-place rewrite of any table file
+  * misses. Non-local stores (no content identity) bypass the memo.
   */
 object PlanMemo {
-
-  /** Query names whose builds are proven pure (see scaladoc). Derived
-    * with `graft.tools.PurityScan` at sf0.001/sf0.01/sf0.1 and pinned by
-    * PlanMemoSpec; keep the list sorted.
-    */
-  private[graft] val memoized: Set[String] = Set(
-    "d01_dedup_exact", "d02_dedup_prefix", "d03_dedup_minhash_lsh",
-    "d04_dedup_simhash", "d05_dedup_ngram_jaccard", "d06_dedup_embedding",
-    "d09_simhash_hamming64", "d10_contamination", "d11_minhash_jaccard_est",
-    "d12_paragraph_dedup", "d13_span_dedup", "d15_editdist_snm",
-    "d16_source_overlap", "d17_span_scrub", "d18_overlap_containment",
-    "d19_lsh_planned", "d21_idf_jaccard", "d22_url_canonical",
-    "d24_charngram_planned", "d25_charband_audit",
-    "d26_lsh_recall_audit", "i01_snapshot_diff", "i02_upsert_merge",
-    "i03_delta_dedup", "i04_late_reconcile", "i05_expectation_audit",
-    "m01_multimodal_meta", "m02_multimodal_decode", "m03_frame_sample",
-    "m04_png_decode", "m05_wav_decode", "m06_resize_real",
-    "m07_wav_frames", "m08_phash_dedup", "m09_audio_fp_dedup",
-    "p01_sample_hash", "p02_sample_stratified", "p03_split_train",
-    "p04_sequence_pack", "p05_token_budget", "p06_lang_rebalance",
-    "p07_repeat_upsample", "p08_shard_stats", "p09_curriculum",
-    "p10_source_cap", "p11_importance_weights", "p12_temperature_mix",
-    "p13_weighted_systematic", "p14_group_split", "p15_bootstrap",
-    "p16_interleave", "p17_epoch_order", "p19_kfold",
-    "p20_srm_audit", "p21_dataset_card", "q01_pricing_summary",
-    "q02_filter_project", "q03_topk_orders", "q04_semi_join",
-    "q05_anti_join", "q06_multijoin_revenue", "q07_scan_agg",
-    "q08_window_topk", "q09_set_union", "q10_set_except",
-    "q11_set_intersect", "q12_rollup_agg", "q13_cube_agg",
-    "q14_scalar_functions", "q15_date_agg", "q16_point_lookup",
-    "q17_distinct_agg", "q18_case_agg", "q19_sort_limit",
-    "q20_range_join", "q21_window_running", "q22_hourly_rollup",
-    "q23_sessionize", "q24_asof_join", "q25_time_range_join",
-    "q26_json_extract", "q27_left_outer_join", "q28_full_outer_join",
-    "q29_grouping_sets", "q30_approx_distinct", "q31_window_frames",
-    "q32_scalar_subquery", "q33_except_all", "q34_first_last",
-    "q35_pivot", "q36_percentiles", "q37_unpivot",
-    "q38_skew_salted", "q39_funnel", "q40_correlated_exists",
-    "q41_cohort_retention", "q42_event_transitions", "q44_lateral_topn",
-    "q45_upsert_latest", "q46_scd2_history", "q47_skyline",
-    "q48_forward_asof", "q49_range_frame", "q50_intersect_all",
-    "q51_gap_fill", "q52_mode_agg", "q53_corr_matrix",
-    "q54_ntile_quartiles", "q55_anomaly_zscore", "q56_column_profile",
-    "q57_attribution", "q58_percent_rank", "q59_islands",
-    "q60_string_agg", "q61_concurrency", "q62_approx_quantiles",
-    "q63_profile_approx", "q64_ewma", "q65_sliding_distinct",
-    "q66_histogram", "q67_rolling_median", "q68_hll_mergeable",
-    "q69_new_vs_returning", "q70_sliding_reach_hll", "q71_cusum_alarms",
-    "q73_incremental_rollup", "q74_cuped", "r01_bm25_topk",
-    "r02_phrase_prox", "r03_hybrid_rrf", "r04_prf_expansion",
-    "r05_snippets", "r06_posting_delta", "r07_lex_vec_agreement",
-    "s01_cosine_topk", "s02_ann_bucketed", "s04_label_centroids",
-    "s05_ann_recall", "s07_quant_error", "s08_knn_graph",
-    "s16_mips_topk", "s17_retrieval_metrics", "s23_dim_truncation",
-    "s24_maxsim", "s25_bq_rerank", "t01_langid",
-    "t02_quality", "t03_tokens", "t04_fingerprint",
-    "t05_tfidf", "t06_bigram_commonality", "t07_repetition",
-    "t08_novelty", "t09_heavy_hitters", "t10_redaction_audit",
-    "t11_blocklist_audit", "t12_classifier_score", "t14_chunk",
-    "t15_char_diversity", "t17_readability", "t18_collocations",
-    "t19_vocab_zipf", "t20_langid_confusion")
 
   private val cache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, String), LogicalPlan]()
 
-  /** The [[QueryDef.run]] implementation: memo-route pure builds, pass
-    * everything else straight through.
-    */
-  def run(q: QueryDef, spark: SparkSession, sfDir: String): DataFrame =
-    if (!memoized(q.name)) q.build(spark, sfDir)
+  /** The [[QueryDef.run]] implementation. */
+  def run(q: QueryDef, spark: SparkSession, sfDir: String): DataFrame = {
+    val ident = Tables.fileIdent(sfDir)
+    // fileIdent returns the bare path for non-local/absent roots — no
+    // content identity to key on, so take the uncached build
+    if (ident == sfDir) q.build(spark, sfDir)
     else {
-      val ident = Tables.fileIdent(sfDir)
-      // fileIdent returns the bare path for non-local/absent roots — no
-      // content identity to key on, so take the uncached build
-      if (ident == sfDir) q.build(spark, sfDir)
+      val key = (spark, q.name, ident)
+      val hit = cache.get(key)
+      if (hit != null) PlanDatasets.ofRows(spark, hit)
       else {
-        Tables.bounded(cache)
-        val plan = cache.computeIfAbsent((spark, q.name, ident),
-          _ => q.build(spark, sfDir).queryExecution.analyzed)
-        org.apache.spark.sql.graftaccess.PlanDatasets.ofRows(spark, plan)
+        val before = Jobs.submitted(spark.sparkContext)
+        val df = q.build(spark, sfDir)
+        val plan = df.queryExecution.analyzed
+        if (Jobs.submitted(spark.sparkContext) == before && storeOnly(plan, sfDir)) {
+          Tables.bounded(cache)
+          cache.put(key, plan)
+        }
+        df
       }
     }
+  }
+
+  /** Names of the queries whose plans are held for `spark` over the
+    * current content of `sfDir`. */
+  private[graft] def held(spark: SparkSession, sfDir: String): Set[String] = {
+    val ident = Tables.fileIdent(sfDir)
+    val names = Set.newBuilder[String]
+    cache.keySet.forEach(k => if ((k._1 eq spark) && k._3 == ident) names += k._2)
+    names.result()
+  }
+
+  private def storeOnly(plan: LogicalPlan, sfDir: String): Boolean = {
+    val root = new java.io.File(sfDir).getCanonicalPath + "/"
+    def underRoot(p: org.apache.hadoop.fs.Path) =
+      new java.io.File(p.toUri.getPath).getCanonicalPath.startsWith(root)
+    plan.collectWithSubqueries { case leaf if leaf.children.isEmpty => leaf }
+      .forall {
+        case l: LogicalRelation => l.relation match {
+          case h: HadoopFsRelation =>
+            h.location.rootPaths.nonEmpty && h.location.rootPaths.forall(underRoot)
+          case _ => false
+        }
+        case _: LocalRelation | _: Range => true
+        case _ => false
+      }
+  }
 }

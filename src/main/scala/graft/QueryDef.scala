@@ -16,10 +16,11 @@ final case class QueryDef(
     build: (SparkSession, String) => DataFrame) {
 
   /** The driver-facing entry point: [[build]], routed through the
-    * analyzed-plan memo for the queries [[PlanMemo]] covers (pure plan
-    * constructions only — every memoized run still optimizes, plans,
-    * codegens and EXECUTES from scratch; see [[PlanMemo]] for the
-    * safety contract and its enforcement).
+    * analyzed-plan memo. A build that starts no Spark jobs and reads only
+    * store tables, literals or ranges has its analyzed plan stored, and
+    * later runs over the same store content re-use it; every run still
+    * optimizes, plans, codegens and EXECUTES from scratch. See
+    * [[PlanMemo]] for the rule and why its job count is synchronous.
     */
   def run(spark: SparkSession, sfDir: String): DataFrame =
     PlanMemo.run(this, spark, sfDir)

@@ -804,8 +804,8 @@ object Dedup {
   /** Meta-ROW memo for committed band-index artifacts. The meta relation
     * is written last (the artifact's commit point) and never rewritten in
     * place except by a full overwrite, which recreates the directory and
-    * changes its mtime — so one (session, path, mtime, length) read is
-    * valid for the artifact's lifetime. Every i07/i08 screen paid two
+    * changes its content identity ([[graft.Tables.fileIdent]]) — so one
+    * read per (session, meta identity) is valid for the artifact's lifetime. Every i07/i08 screen paid two
     * meta reads (existence probe + load) with a scheduled head() job
     * each, per invocation, for bytes that cannot have changed. Non-local
     * paths (no java.io.File identity — the fault-injecting test schemes)
@@ -813,15 +813,6 @@ object Dedup {
     */
   private val metaRowCache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), Option[org.apache.spark.sql.Row]]()
-
-  /** Identity of a local directory's CONTENTS (entry names + lengths +
-    * mtimes), not just the directory mtime: two rebuilds inside one
-    * mtime tick still differ in part-file identity, so a stale memo hit
-    * would need identical names, byte counts and timestamps. */
-  private def dirIdentity(dir: java.io.File): String =
-    Option(dir.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .mkString(s"${dir.lastModified}|", ",", "")
 
   /** None ⇔ the meta relation exists but holds no rows (a torn write):
     * `take(1)` instead of `head()` so an empty meta is a VALUE, not a
@@ -837,7 +828,7 @@ object Dedup {
     else {
       graft.Tables.bounded(metaRowCache)
       metaRowCache.computeIfAbsent(
-        (spark, s"$path|${dirIdentity(dir)}"),
+        (spark, graft.Tables.fileIdent(dir.getPath)),
         _ => spark.read.parquet(s"$path/meta").take(1).headOption)
     }
   }
@@ -886,7 +877,7 @@ object Dedup {
   def loadBandIndex(spark: SparkSession, path: String): BandIndex = {
     val metaDir = new java.io.File(path, "meta")
     if (metaDir.exists()) {
-      val key = (spark, s"$path|${dirIdentity(metaDir)}|" +
+      val key = (spark, s"${graft.Tables.fileIdent(metaDir.getPath)}|" +
         bandIndexBatches(spark, path).mkString(","))
       graft.Tables.bounded(bandIndexCache)
       bandIndexCache.computeIfAbsent(key, _ => loadBandIndexUncached(spark, path))

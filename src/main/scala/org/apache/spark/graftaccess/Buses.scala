@@ -3,9 +3,9 @@ package org.apache.spark.graftaccess
 import org.apache.spark.SparkContext
 
 /** Compile-time access shim for `SparkContext.listenerBus` (private[spark]):
-  * lets the purity scanner / tests drain the async listener bus so that
-  * job-start counters observed around a plan construction are exact, not
-  * racing event delivery.
+  * lets profiling tools drain the async listener bus so that the
+  * job events observed around a query run are complete, not racing event
+  * delivery.
   */
 object Buses {
   def waitUntilListenerBusEmpty(sc: SparkContext, timeoutMs: Long = 10000L): Unit =

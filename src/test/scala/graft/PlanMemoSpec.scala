@@ -1,23 +1,23 @@
 package graft
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.graftaccess.Jobs
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** The r17 analyzed-plan memo: plans, never results. These tests pin the
-  * three load-bearing properties:
+/** The analyzed-plan memo: plans, never results. These tests pin the
+  * load-bearing properties:
   *
-  *   1. ENFORCEMENT — every name in [[PlanMemo.memoized]] has a build
-  *      that is provably pure on this live catalog (zero Spark jobs on a
-  *      warm build; every plan leaf a store relation / literal / range),
-  *      so a memo hit can never skip real work. The classifier is the
-  *      same code `graft.tools.PurityScan` prints with.
+  *   1. RUNTIME PURITY — a miss stores the plan only when the build
+  *      started zero Spark jobs and every plan leaf is a store relation /
+  *      literal / range. A cold build (schema-inference jobs), an eager
+  *      build and a read outside the store are never stored.
   *   2. FRESH EXECUTION — a hit shares the analyzed LOGICAL plan but
   *      builds a new QueryExecution, so optimization/physical planning/
-  *      execution re-run; nothing computed is reused, and results equal
-  *      the unmemoized build's.
+  *      execution re-run; nothing computed is reused, and every held
+  *      query's results equal its direct build's.
   *   3. INVALIDATION — an in-place rewrite of a nested store file (same
   *      entry names, directory mtime unchanged) mints a new key.
   */
@@ -28,41 +28,106 @@ class PlanMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  test("every memoized query's build is pure: zero warm-build jobs, " +
-      "store-only plan leaves") {
-    val jobs = tools.PurityScan.counter(spark)
-    val byName = QueryCatalog.byName
-    val failures = PlanMemo.memoized.toSeq.sorted.flatMap { name =>
-      byName.get(name) match {
-        case None => Some(s"$name: memoized but not in the catalog")
-        case Some(q) =>
-          val p = tools.PurityScan.classify(spark, jobs, q, sfDir)
-          if (p.pure) None
-          else Some(s"$name: warmJobs=${p.warmJobs} bad=${p.badLeaves} err=${p.err}")
-      }
-    }
-    assert(failures.isEmpty, "impure memoized builds:\n" + failures.mkString("\n"))
+  private def jobs(): Int = Jobs.submitted(spark.sparkContext)
+
+  /** Copies `src` (a parquet file or directory) to `dst`. */
+  private def copyTree(src: Path, dst: Path): Unit =
+    if (Files.isDirectory(src)) {
+      Files.createDirectories(dst)
+      Files.list(src).forEach(p => copyTree(p, dst.resolve(p.getFileName)))
+    } else Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING)
+
+  /** A fresh copy of the store under `target`: nothing memoized for it. */
+  private def freshStore(prefix: String): String = {
+    val dir = Files.createTempDirectory(Paths.get("target"), prefix)
+    Files.list(Paths.get(sfDir)).forEach(p => copyTree(p, dir.resolve(p.getFileName)))
+    dir.toString
   }
 
-  test("a memo hit is a fresh execution over the same analyzed plan, " +
-      "with results equal to the direct build") {
+  /** Order-insensitive, value-based rendering of a result. */
+  private def rows(df: DataFrame): Seq[String] = {
+    def canon(v: Any): String = v match {
+      case null => "null"
+      case b: Array[Byte] => b.map("%02x".format(_)).mkString("0x", "", "")
+      case r: Row => r.toSeq.map(canon).mkString("(", ",", ")")
+      case m: scala.collection.Map[_, _] =>
+        m.toSeq.map { case (k, x) => s"${canon(k)}->${canon(x)}" }.sorted
+          .mkString("{", ",", "}")
+      case s: scala.collection.Seq[_] => s.map(canon).mkString("[", ",", "]")
+      case other => other.toString
+    }
+    df.collect().toSeq.map(canon).sorted
+  }
+
+  test("a cold build is not memoized, the next warm build is, and the third run hits") {
+    val dir = freshStore("planmemo-cold")
     val q = QueryCatalog.byName("q07_scan_agg")
-    val a = q.run(spark, sfDir)
-    val b = q.run(spark, sfDir)
-    assert(a.queryExecution ne b.queryExecution,
-      "each run must execute through its own QueryExecution (no result reuse)")
-    assert(a.queryExecution.analyzed eq b.queryExecution.analyzed,
-      "the second run should hit the memoized analyzed plan")
-    val direct = q.build(spark, sfDir)
-    assert(b.collect().toSeq == direct.collect().toSeq)
+    val j0 = jobs()
+    val p1 = q.run(spark, dir).queryExecution.analyzed
+    assert(jobs() > j0, "precondition: the cold build infers schemas with Spark jobs")
+    assert(!PlanMemo.held(spark, dir)(q.name), "a build that started jobs must not be stored")
+    val j1 = jobs()
+    val p2 = q.run(spark, dir).queryExecution.analyzed
+    assert(jobs() == j1, "precondition: the warm build starts no jobs")
+    assert(PlanMemo.held(spark, dir)(q.name), "a pure warm build must be stored")
+    val p3 = q.run(spark, dir).queryExecution.analyzed
+    assert(p3 eq p2, "the third run must hit the stored plan")
+    assert(p1 ne p2)
   }
 
   test("non-memoized (eager) queries bypass the memo entirely") {
     val q = QueryCatalog.byName("d07_dup_clusters")
-    assert(!PlanMemo.memoized(q.name))
-    val a = q.run(spark, sfDir)
-    val b = q.run(spark, sfDir)
-    assert(a.queryExecution.analyzed ne b.queryExecution.analyzed)
+    val plans = (1 to 3).map { _ =>
+      val j0 = jobs()
+      val plan = q.run(spark, sfDir).queryExecution.analyzed
+      assert(jobs() > j0, "precondition: every d07 build starts Spark jobs")
+      plan
+    }
+    assert(!PlanMemo.held(spark, sfDir)(q.name))
+    for (Seq(a, b) <- plans.combinations(2)) assert(a ne b)
+  }
+
+  test("a job-free build that reads parquet outside the store is never memoized") {
+    val store = freshStore("planmemo-store")
+    val elsewhere = Files.createTempDirectory(Paths.get("target"), "planmemo-foreign")
+    copyTree(Paths.get(store, "region.parquet"), elsewhere.resolve("region.parquet"))
+    // an explicit schema: no inference job, so only the leaf rule decides
+    val schema = spark.read.parquet(s"$store/region.parquet").schema
+    def reading(name: String, path: String => String) =
+      QueryDef(name, None, (s, sf) => s.read.schema(schema).parquet(path(sf)))
+    val outside = reading("synthetic_foreign_read", _ => s"$elsewhere/region.parquet")
+    val inside = reading("synthetic_store_read", sf => s"$sf/region.parquet")
+
+    val j0 = jobs()
+    val plans = (1 to 3).map(_ => outside.run(spark, store).queryExecution.analyzed)
+    assert(jobs() == j0, "precondition: the foreign read's builds start no jobs")
+    assert(!PlanMemo.held(spark, store)(outside.name))
+    for (Seq(a, b) <- plans.combinations(2)) assert(a ne b)
+
+    // control: the same read rooted under the store is held
+    val i1 = inside.run(spark, store).queryExecution.analyzed
+    assert(PlanMemo.held(spark, store)(inside.name))
+    assert(inside.run(spark, store).queryExecution.analyzed eq i1)
+  }
+
+  test("a memo hit is a fresh execution over the same analyzed plan, " +
+      "with results equal to the direct build") {
+    // cold then warm build of every query: the warm one fills the memo
+    for (_ <- 1 to 2; q <- QueryCatalog.all) q.run(spark, sfDir)
+    val held = PlanMemo.held(spark, sfDir)
+    assert(held("q07_scan_agg"), s"held: ${held.toSeq.sorted}")
+    val failures = QueryCatalog.all.filter(q => held(q.name)).flatMap { q =>
+      val a = q.run(spark, sfDir)
+      val b = q.run(spark, sfDir)
+      if (a.queryExecution eq b.queryExecution)
+        Some(s"${q.name}: runs share a QueryExecution (result reuse)")
+      else if (a.queryExecution.analyzed ne b.queryExecution.analyzed)
+        Some(s"${q.name}: second run missed the memo")
+      else if (rows(b) != rows(q.build(spark, sfDir)))
+        Some(s"${q.name}: memo hit differs from the direct build")
+      else None
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
   }
 
   test("an in-place same-name rewrite of a nested store file misses the memo") {
@@ -77,9 +142,10 @@ class PlanMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.copy(src, dst.resolve("part-00000.snappy.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     val q = QueryCatalog.byName("d01_dedup_exact")
+    q.run(spark, dir) // cold: schema inference, not stored
     val p1 = q.run(spark, dir).queryExecution.analyzed
     val p2 = q.run(spark, dir).queryExecution.analyzed
-    assert(p1 eq p2, "stable store: second run must hit")
+    assert(p1 eq p2, "stable store: a warm run must hit")
     // rewrite every nested entry IN PLACE: same names, same byte content,
     // fresh mtimes; the parent directory's own mtime does not change
     val dirMtimeBefore = dst.toFile.lastModified
