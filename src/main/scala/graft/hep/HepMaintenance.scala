@@ -28,6 +28,8 @@ object HepMaintenance {
 
   /** Compacts one member table of a hep store; returns (filesBefore,
     * filesAfter). No-op (and no swap) when the table directory is absent.
+    * Open a new [[HepReader]] afterwards: a reader that already used the
+    * table holds a file listing naming the deleted files.
     */
   def compact(
       spark: SparkSession, storePath: String, table: String,

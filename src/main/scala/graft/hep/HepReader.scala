@@ -1,5 +1,6 @@
 package graft.hep
 
+import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import Schemas._
@@ -8,9 +9,25 @@ import Schemas._
   *
   * Every projection below is a lazy DataFrame: only the accessed columns
   * reach the parquet reader (column pruning = the reference's lazy
-  * per-column reads, `read/hdf.py:262-316`), and process/chunk/event
-  * predicates prune partitions and row groups (= the reference's O(1)
-  * `divmod` B-tree descent, `read/hdf.py:454-466`).
+  * per-column reads, `read/hdf.py:262-316`). A point lookup's process and
+  * chunk predicates prune partitions, so only that chunk's files are
+  * opened (= the reference's O(1) `divmod` B-tree descent,
+  * `read/hdf.py:454-466`); its event_id predicate is pushed to the
+  * parquet scan, which skips row groups only when a chunk file holds
+  * several of them — a chunk written in one row group is read whole and
+  * filtered.
+  *
+  * A reader is a snapshot of its store, like the reference's open
+  * `h5py.File`: each member table's schema and file listing are resolved
+  * once, at its first use; the `processes` metadata is collected once,
+  * after which [[process]] is a map lookup that starts no job and
+  * [[processes]] is a local Dataset of the same rows; the
+  * `_meta.json` sidecar is read once (the reference's per-open attr
+  * cache, `read/hdf.py:437`). A lookup therefore pays only its own scan.
+  * Files written or rewritten after a table's first use (a store rebuilt
+  * in place, [[HepMaintenance.compact]]) are not seen: open a new reader.
+  * A table whose open fails is not remembered, so the next access retries
+  * it; one reader may serve lookups from several threads.
   *
   * Iteration contract: [[ProcessReader.events]] is UNORDERED by default,
   * matching the reference's native-order scan (`read/hdf.py:419-428`);
@@ -18,40 +35,41 @@ import Schemas._
   */
 final class HepReader(spark: SparkSession, path: String) {
 
-  private def table(name: String): DataFrame =
-    spark.read.parquet(s"$path/$name")
+  private val opened = mutable.Map.empty[String, DataFrame]
 
-  /** All process metadata (the tiny broadcastable dimension). Stores
-    * written before the decay surface existed lack `in_pcls`/`out_pcls`;
-    * they are patched in as empty arrays so old stores keep opening
-    * (schema evolution, additive-columns-only).
+  private def table(name: String): DataFrame = synchronized {
+    opened.getOrElseUpdate(name, spark.read.parquet(s"$path/$name"))
+  }
+
+  /** The `processes` table, collected once. Stores written before the
+    * decay surface existed lack `in_pcls`/`out_pcls`; they are patched in
+    * as empty arrays so old stores keep opening (schema evolution,
+    * additive-columns-only).
     */
-  def processes: Dataset[ProcessMeta] = {
+  private lazy val metas: Map[String, ProcessMeta] = {
     import spark.implicits._
     var df = table(ProcessesTable)
     for (c <- Seq("in_pcls", "out_pcls") if !df.columns.contains(c))
       df = df.withColumn(c, typedLit(Seq.empty[Int]))
-    df.as[ProcessMeta]
+    df.as[ProcessMeta].collect().map(m => m.process -> m).toMap
+  }
+
+  /** All process metadata (the tiny broadcastable dimension). */
+  def processes: Dataset[ProcessMeta] = {
+    import spark.implicits._
+    metas.values.toSeq.toDS()
   }
 
   /** Process lookup by key (reference `HdfReader.__getitem__`). */
   def process(key: String): ProcessReader = {
-    val metas = processes.filter(col("process") === key).collect()
-    require(metas.nonEmpty, s"no such process: $key")
-    new ProcessReader(metas.head)
+    require(metas.contains(key), s"no such process: $key")
+    new ProcessReader(metas(key))
   }
 
   /** File-level `evts_per_chunk` attr from the `_meta.json` sidecar, read
     * through the Hadoop `FileSystem` of the store's path (works on any
     * scheme — a `java.io.File` read would silently miss the sidecar on
     * HDFS/S3 and mis-address every chunk of a non-default store).
-    *
-    * `lazy val`: the sidecar is written once at store creation and never
-    * rewritten, so one FS read per reader is the whole cost — a plain
-    * `def` re-read it on EVERY point lookup (one remote round-trip per
-    * `event(n)`), the same eager-attr-cache rationale as the reference's
-    * `read/hdf.py:437`. Cache-coherence is per reader instance, matching
-    * the reference's per-open-file attribute snapshot.
     */
   lazy val evtsPerChunk: Int =
     HadoopIo.readString(spark, s"$path/_meta.json") match {
@@ -104,7 +122,7 @@ final class HepReader(spark: SparkSession, path: String) {
     def events: DataFrame = inProc(table(EventsTable))
 
     /** Point lookup (reference `proc[evt_num]`): process + chunk partition
-      * pruning + event_id row-group skip.
+      * pruning + event_id pushed to the scan.
       */
     def event(n: Long): EventReader =
       new EventReader(this, n, n / evtsPerChunk)

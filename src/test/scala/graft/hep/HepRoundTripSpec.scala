@@ -1,7 +1,9 @@
 package graft.hep
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.{Callable, Executors, TimeUnit}
+import org.apache.spark.scheduler.graftaccess.Jobs
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import Schemas._
@@ -30,6 +32,20 @@ class HepRoundTripSpec extends AnyFunSuite with BeforeAndAfterAll {
     b.setEdgeWeights(Array.tabulate(n)(_ * 0.5))
     b.setCustom("weights2", Array.tabulate(n)(_ * 2.0))
     b.setCustomMeta("note", s"event-${b.eventId}")
+  }
+
+  private def jobs(): Int = Jobs.submitted(spark.sparkContext)
+
+  /** A one-process store whose events carry only pdg and final mask. */
+  private def writeBare(d: String, process: String, counts: Seq[Int]): Unit = {
+    val w = new HepWriter(spark, d, evtsPerChunk = 10)
+    val p = w.newProcess(process)
+    for (n <- counts) {
+      val b = p.newEvent()
+      b.setPdg(Array.tabulate(n)(11 + _)).setMask("final", Array.tabulate(n)(_ % 2 == 0))
+      p.commitEvent(b)
+    }
+    w.close()
   }
 
   test("write then read round-trips particles, masks, edges, metadata") {
@@ -253,5 +269,84 @@ class HepRoundTripSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(after - before <= 1,
       s"expected at most one sidecar read across two point lookups, " +
         s"got ${after - before}")
+  }
+
+  test("an opened reader: process() starts no job, a lookup exactly one") {
+    val r = new HepReader(spark, dir)
+    r.process("higgs").event(7).finalParticles.collect() // opens the tables
+    val j0 = jobs()
+    val proc = r.process("higgs")
+    assert(r.processes.collect().map(_.process).toSeq == Seq("higgs"))
+    assert(jobs() - j0 == 0, "process metadata on an opened reader started a job")
+    val j1 = jobs()
+    val fin = proc.event(13).finalParticles.collect()
+    assert(jobs() - j1 == 1, s"a point lookup started ${jobs() - j1} jobs")
+    assert(fin.map(_.getAs[Int]("idx")).sorted.toSeq ==
+      (0 until 4 + 13 % 3).filter(_ % 2 == 0))
+    // another reader on the same path opens its own tables
+    val j2 = jobs()
+    assert(new HepReader(spark, dir).process("higgs").length == 25)
+    assert(jobs() - j2 >= 1, "a new reader reused another reader's open state")
+  }
+
+  test("a reader is a snapshot: a rewritten store needs a new reader") {
+    val d = dir + "-snap"
+    writeBare(d, "before", Seq(3))
+    val old = new HepReader(spark, d)
+    assert(old.process("before").event(0).pdg.count() == 3)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d))
+    writeBare(d, "after", Seq(2))
+    assert(old.process("before").length == 1)
+    assert(old.processes.collect().map(_.process).toSeq == Seq("before"))
+    intercept[IllegalArgumentException] { old.process("after") }
+    val fresh = new HepReader(spark, d)
+    assert(fresh.process("after").event(0).pdg.count() == 2)
+    intercept[IllegalArgumentException] { fresh.process("before") }
+  }
+
+  test("process of an unknown key throws IllegalArgumentException") {
+    val r = new HepReader(spark, dir)
+    val e = intercept[IllegalArgumentException] { r.process("missing") }
+    assert(e.getMessage.contains("no such process: missing"))
+    assert(r.process("higgs").length == 25) // the reader stays usable
+  }
+
+  test("a store without custom datasets: lookups work, custom fails every time") {
+    val d = dir + "-nocustom"
+    writeBare(d, "nc", Seq(4, 5))
+    val r = new HepReader(spark, d)
+    val ev = r.process("nc").event(1)
+    assert(ev.pdg.count() == 5)
+    val e1 = intercept[AnalysisException] { ev.custom("w") }
+    val e2 = intercept[AnalysisException] { r.process("nc").event(0).custom("w") }
+    assert(e1.getCondition == e2.getCondition && e1.getMessage == e2.getMessage)
+    assert(ev.finalParticles.count() == 3) // other tables not poisoned
+    assert(r.process("nc").event(0).count == 4)
+    // the failure was not remembered: once the table exists, it opens
+    import spark.implicits._
+    Seq(CustomRow("nc", 1L, "w", Seq(0.5))).toDS()
+      .withColumn("chunk", org.apache.spark.sql.functions.lit(0L))
+      .write.partitionBy("process", "chunk").parquet(s"$d/$CustomTable")
+    assert(ev.custom("w").collect().map(_.getSeq[Double](0)).toSeq == Seq(Seq(0.5)))
+  }
+
+  test("lookups from 4 threads through one reader return the written values") {
+    val r = new HepReader(spark, dir) // the threads race its first opens too
+    val pool = Executors.newFixedThreadPool(4)
+    try {
+      val futures = (0 until 4).map { t =>
+        pool.submit(new Callable[Seq[String]] {
+          def call(): Seq[String] = (0 until 6).map(t * 6 + _).flatMap { e =>
+            val n = 4 + e % 3
+            val ev = r.process("higgs").event(e)
+            val pdg = ev.pdg.collect().sortBy(_.getInt(0)).map(_.getInt(1)).toSeq
+            if (ev.count == n && pdg == (0 until n).map(11 + _)) None
+            else Some(s"event $e: count ${ev.count}, pdg $pdg")
+          }
+        })
+      }
+      val bad = futures.flatMap(_.get(5, TimeUnit.MINUTES))
+      assert(bad.isEmpty, bad.mkString("; "))
+    } finally pool.shutdownNow()
   }
 }
