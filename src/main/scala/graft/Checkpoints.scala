@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Deterministic cleanup for iterative localCheckpoint loops.
   *
   * `Dataset.localCheckpoint(eager)` truncates lineage (the fix for the
-  * O(rounds)-deep-plan trap in BFS/label-propagation loops) but pins its
+  * O(rounds)-deep-plan trap in label-propagation loops) but pins its
   * snapshot in executor storage with no public per-Dataset release:
   * `Dataset.unpersist` only touches the SQL cache manager, not the
   * checkpoint's RDD-level persist, so superseded rounds would pile up

@@ -1,22 +1,21 @@
 package graft.hep
 
+import scala.collection.mutable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 /** Traversal operators over the per-event ancestry DAG (`edges` table:
   * process, event_id, src, dst, weight). The reference stores the COO edge
-  * list but offers no traversal (SURVEY.md §2.6); these are the
-  * GraphFrames-style self-join primitives.
-  *
-  * All joins are equi-joins on (process, event_id, vertex) — at scale they
-  * co-partition on the same keys as the edges table's layout, so BFS
-  * rounds shuffle only frontier-sized data.
+  * list but offers no traversal (SURVEY.md §2.6). `children`/`parents` are
+  * GraphFrames-style equi-joins on (process, event_id, vertex), which
+  * co-partition with the edges table's layout; `descendants` walks each
+  * event's DAG inside one row.
   */
 object Ancestry {
 
-  /** Renames the vertex side so repeated edge/frontier self-joins never
-    * produce ambiguous attributes (the frontier itself derives from the
-    * edges table in BFS rounds).
+  /** Renames the vertex side so an edge self-join never produces ambiguous
+    * attributes (the vertex set may itself derive from the edges table).
     */
   private def renamed(vertices: DataFrame): DataFrame =
     vertices.select(col("process").as("v_process"),
@@ -39,60 +38,46 @@ object Ancestry {
   def parents(edges: DataFrame, vertices: DataFrame): DataFrame =
     hop(edges, vertices, "dst", "src")
 
-  /** All vertices reachable from `roots` within `maxDepth` hops (BFS via
-    * iterated equi-joins; each round's frontier excludes visited vertices,
-    * so rounds terminate on DAGs and on cycles alike).
+  /** All vertices reachable from `roots` ((process, event_id, vtx)) within
+    * `maxDepth` hops, roots excluded — even when another root reaches them.
     *
-    * Each round TRUNCATES LINEAGE with an eager `localCheckpoint` —
-    * persist alone is not enough: a persisted DataFrame keeps its full
-    * logical plan, so after d rounds every analysis/canonicalization/
-    * cache-lookup pass walks an O(d)-deep union-join tree and driver-side
-    * planning alone goes quadratic in depth (measured: a depth-30 chain
-    * took minutes under persist-only, sub-minute checkpointed — the
-    * classic iterative-Spark trap the r2 verdict flagged). localCheckpoint
-    * materializes each round's small frontier/visited set to executor
-    * storage and restarts the plan from it; the recompute-on-executor-loss
-    * tradeoff is the standard one for iterative temp state (GraphFrames
-    * does the same). Superseded snapshots are freed deterministically via
-    * [[graft.Checkpoints]] one round after their last reader, so live
-    * storage stays O(1) copies instead of O(depth). Spec-covered by a
-    * depth-30 chain in AncestrySpec.
+    * Each event's DAG is independent of every other's (PAPER.md §1.1), so
+    * the walk runs per event in one pass: the roots are grouped per event,
+    * the edges are semi-joined to those events and grouped into one
+    * adjacency row per event, and a multi-source BFS with a visited set
+    * runs inside that row. The plan does not grow with depth, and cycles
+    * terminate because a vertex is entered once. An event's edge list must
+    * fit in one row (events are bounded in size by physics, as
+    * [[graft.sources.HepMcIngest]] also assumes). Vertex ids are walked as
+    * LONG, so a root column of a wider integer type still matches the
+    * INT edge ids; `vtx` keeps the type the two widen to.
     */
   def descendants(edges: DataFrame, roots: DataFrame, maxDepth: Int): DataFrame = {
-    import graft.Checkpoints
-    val spark = roots.sparkSession
-    val keys = Seq("process", "event_id", "vtx")
-    val (rootSet, rootIds) =
-      Checkpoints.checkpoint(roots.select(keys.map(col): _*).distinct())
-    var visited = rootSet
-    var visitedIds = rootIds
-    var frontier = rootSet
-    var frontierIds = rootIds
-    var depth = 0
-    var drained = false
-    while (depth < maxDepth && !drained) {
-      val (next, nextIds) = Checkpoints.checkpoint(
-        children(edges, frontier).join(visited, keys, "left_anti"))
-      if (next.isEmpty) {
-        Checkpoints.free(spark, nextIds)
-        drained = true
-      } else {
-        // the union materializes next's rows into the new snapshot, so the
-        // superseded visited/frontier snapshots can be freed — except the
-        // root set, which the final anti-join still reads
-        val (grown, grownIds) = Checkpoints.checkpoint(visited.union(next))
-        val (oldV, oldF) = (visitedIds, frontierIds)
-        visited = grown; visitedIds = grownIds
-        frontier = next; frontierIds = nextIds
-        if (oldF != rootIds && oldF != oldV) Checkpoints.free(spark, oldF)
-        if (oldV != rootIds) Checkpoints.free(spark, oldV)
+    val event = Seq("process", "event_id")
+    val walk = udf { (starts: Seq[Long], src: Seq[Long], dst: Seq[Long]) =>
+      val adj = src.zip(dst).groupMap(_._1)(_._2)
+      val seen = mutable.HashSet.from(starts)
+      val out = mutable.ArrayBuffer.empty[Long]
+      var frontier = starts
+      var depth = 0
+      while (depth < maxDepth && frontier.nonEmpty) {
+        frontier = frontier.flatMap(adj.getOrElse(_, Nil)).filter(seen.add)
+        out ++= frontier
         depth += 1
       }
+      out.toSeq
     }
-    // the last frontier is not part of the result plan; the final visited
-    // (and the root set) stay pinned until the caller drops the result
-    if (frontierIds != visitedIds && frontierIds != rootIds)
-      Checkpoints.free(spark, frontierIds)
-    visited.join(rootSet, keys, "left_anti")
+    val rootSets = roots.groupBy(event.map(col): _*)
+      .agg(collect_set(col("vtx").cast("long")).as("starts"))
+    val adjacency = edges.filter(col("src").isNotNull && col("dst").isNotNull)
+      .join(rootSets, event, "left_semi")
+      .groupBy(event.map(col): _*)
+      .agg(collect_list(struct(col("src").cast("long").as("src"),
+        col("dst").cast("long").as("dst"))).as("adj"))
+    val vtxType = roots.select("vtx").union(edges.select("dst")).schema.head.dataType
+    rootSets.join(adjacency, event)
+      .select(col("process"), col("event_id"),
+        explode(walk(col("starts"), col("adj.src"), col("adj.dst"))
+          .cast(ArrayType(vtxType))).as("vtx"))
   }
 }

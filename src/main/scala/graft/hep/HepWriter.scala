@@ -233,29 +233,34 @@ final class HepWriter(
         })
 
       def append[T <: Product : org.apache.spark.sql.Encoder](
-          rows: Seq[T], table: String, partitioned: Boolean): Unit = {
+          rows: Seq[T], table: String): Unit = {
         if (rows.isEmpty) return
-        val df = spark.createDataset(rows).toDF()
-          .withColumn("chunk", expr(s"event_id div $evtsPerChunk"))
         // per-store codec, the parquet counterpart of the reference's
         // per-dataset gzip/lzf choice (write/hdf.py:552-564); zstd default
-        val w = df.write.mode(SaveMode.Append)
+        spark.createDataset(rows).toDF()
+          .withColumn("chunk", expr(s"event_id div $evtsPerChunk"))
+          .write.mode(SaveMode.Append)
           .option("compression", compression)
           .options(levelOpts)
-        (if (partitioned) w.partitionBy("process", "chunk") else w)
+          .partitionBy("process", "chunk")
           .parquet(s"$path/$table")
       }
-      append(particles, ParticlesTable, partitioned = true)
-      append(edgeRows, EdgesTable, partitioned = true)
-      append(eventRows, EventsTable, partitioned = true)
-      append(customRows, CustomTable, partitioned = true)
+      append(particles, ParticlesTable)
+      append(edgeRows, EdgesTable)
+      append(eventRows, EventsTable)
+      append(customRows, CustomTable)
     }
   }
 
   private val procs = mutable.LinkedHashMap.empty[String, ProcessBuilder]
 
-  /** Opens a new process group (reference `new_process`). */
+  /** Opens a new process group (reference `new_process`). A key already
+    * opened in this writer is refused, as h5py's `create_group` refuses an
+    * existing name: a second builder would restart event_id at 0 over the
+    * first one's flushed chunks.
+    */
   def newProcess(key: String): ProcessBuilder = {
+    require(!procs.contains(key), s"process $key is already open in this writer")
     val b = new ProcessBuilder(key)
     procs(key) = b
     b
@@ -292,19 +297,4 @@ object HepWriter {
       doubles: Array[Double] = Array.empty,
       longs: Array[Long] = Array.empty,
       grid: Array[Array[Double]] = Array.empty)
-
-  /** Bulk ingest path: writes an existing particles Dataset directly with
-    * the standard partitioning — the distributed (non-builder) write
-    * surface for cluster-scale jobs.
-    */
-  def writeParticles(
-      spark: SparkSession,
-      path: String,
-      particles: org.apache.spark.sql.Dataset[Particle],
-      evtsPerChunk: Int = DefaultEvtsPerChunk): Unit =
-    particles.toDF()
-      .withColumn("chunk", expr(s"event_id div $evtsPerChunk"))
-      .write.mode(SaveMode.Append)
-      .partitionBy("process", "chunk")
-      .parquet(s"$path/${ParticlesTable}")
 }

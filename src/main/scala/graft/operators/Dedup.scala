@@ -1257,10 +1257,11 @@ object Dedup {
     }
     // lineage truncation per round (localCheckpoint, not just persist):
     // a persisted DataFrame keeps its full logical plan, so driver-side
-    // analysis/cache-lookup would walk an O(rounds)-deep tree each round —
-    // same trap fixed in Ancestry.descendants. Superseded snapshots are
-    // freed one round after their last reader (graft.Checkpoints), keeping
-    // live storage at 2 label copies instead of O(rounds)
+    // analysis/cache-lookup would walk an O(rounds)-deep tree each round,
+    // so planning alone would grow quadratically in rounds. Superseded
+    // snapshots are freed one round after their last reader
+    // (graft.Checkpoints), keeping live storage at 2 label copies instead
+    // of O(rounds)
     val spark = pairs.sparkSession
     var (labels, labelIds) = graft.Checkpoints.checkpoint(
       edges.select(col("src").as("doc_id")).distinct()

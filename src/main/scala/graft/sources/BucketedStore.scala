@@ -35,14 +35,14 @@ object BucketedStore {
 
   /** Registers a hep store's `particles` and `edges` as catalog tables
     * co-bucketed on (process, event_id) — the store's natural join keys.
-    * Every ancestry traversal round (edges ⋈ frontier on process/event_id/
-    * vertex) and every event-sliced particle⋈edge join then satisfies its
-    * distribution from the bucket layout: `HashPartitioning(process,
-    * event_id)` clusters any superset join key, so the plans carry ZERO
-    * Exchange (asserted in BucketedStoreSpec). One shuffle at write time,
-    * amortized over every traversal — the co-location layout the 100 TB
-    * design point wants for the hep side specifically, because BFS rounds
-    * re-join the same edges table O(depth) times.
+    * Every ancestry hop (`Ancestry.children`/`parents`: edges ⋈ vertices on
+    * process/event_id/vertex) and every event-sliced particle⋈edge join
+    * then satisfies its distribution from the bucket layout:
+    * `HashPartitioning(process, event_id)` clusters any superset join key,
+    * so the plans carry ZERO Exchange (asserted in BucketedStoreSpec). One
+    * shuffle at write time, amortized over every later join on the same
+    * edges table — the co-location layout the 100 TB design point wants for
+    * the hep side.
     *
     * Registration OVERWRITES: the target tables (and their warehouse
     * directories) are dropped first, like every writeBucketed call — so

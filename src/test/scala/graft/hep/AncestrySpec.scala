@@ -1,6 +1,9 @@
 package graft.hep
 
+import org.apache.spark.scheduler.graftaccess.Jobs
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -44,9 +47,9 @@ class AncestrySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("deep chain: depth-30 walk completes without plan blow-up") {
     import spark.implicits._
-    // a 31-vertex path graph forces 30 BFS rounds; without the per-round
-    // persist/unpersist of `visited` the lineage is a 30-deep union tree
-    // and each round re-computes the whole prefix (O(d^2) blow-up)
+    // a 31-vertex path graph is 30 hops deep: a walk that joined once per
+    // hop would build a 30-deep plan and re-compute the whole prefix each
+    // hop (O(d^2) blow-up); the per-event walk's plan is depth-independent
     val chain = (0 until 30)
       .map(i => ("p", 0L, i, i + 1, 1.0))
       .toDF("process", "event_id", "src", "dst", "weight")
@@ -63,5 +66,66 @@ class AncestrySpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("process", "event_id", "src", "dst", "weight")
     // roots are excluded from the result even when reachable via the cycle
     assert(vtxSet(Ancestry.descendants(cyc, verts(0), 100)) == Set(1, 2))
+  }
+
+  test("a LONG root column matches the INT edge ids") {
+    val d = Ancestry.descendants(edges, verts(0).withColumn("vtx", col("vtx").cast("long")), 10)
+    assert(d.schema("vtx").dataType == LongType)
+    assert(d.collect().map(_.getAs[Long]("vtx")).toSet == Set(1L, 2L, 3L, 4L))
+  }
+
+  test("the walk starts the same number of jobs at depth 1 and 30") {
+    import spark.implicits._
+    val chain = (0 until 30)
+      .map(i => ("p", 0L, i, i + 1, 1.0))
+      .toDF("process", "event_id", "src", "dst", "weight")
+    def jobs(depth: Int): Int = {
+      val before = Jobs.submitted(spark.sparkContext)
+      assert(vtxSet(Ancestry.descendants(chain, verts(0), depth)) == (1 to depth).toSet)
+      Jobs.submitted(spark.sparkContext) - before
+    }
+    assert(jobs(1) == jobs(30))
+  }
+
+  test("random multi-event graphs match a plain-Scala BFS at depths 0-5") {
+    import spark.implicits._
+    // level-by-level reference: depth d adds the unvisited heads of edges
+    // whose tail is on level d-1; roots are never part of the result
+    def reference(edges: Seq[(String, Long, Int, Int)], roots: Seq[(String, Long, Int)],
+        depth: Int): Set[(String, Long, Int)] =
+      roots.groupBy(r => (r._1, r._2)).toSeq.flatMap { case ((p, e), rs) =>
+        val start = rs.map(_._3).toSet
+        val reached = (1 to depth).foldLeft((start, start)) { case ((seen, level), _) =>
+          val next = edges.collect { case (`p`, `e`, s, d) if level(s) && !seen(d) => d }.toSet
+          (seen ++ next, next)
+        }._1 -- start
+        reached.map(v => (p, e, v))
+      }.toSet
+
+    for (seed <- Seq(11L, 12L, 13L)) {
+      val rnd = new scala.util.Random(seed)
+      // both processes number their events 0-3 and their vertices 0-7, so
+      // any walk that leaks across events or processes reaches extra ids;
+      // event 3 has no edges. Random pairs give cycles and self-loops.
+      val random = for {
+        p <- Seq("a", "b"); e <- 0L to 2L; _ <- 0 until 6 + rnd.nextInt(8)
+      } yield (p, e, rnd.nextInt(8), rnd.nextInt(8))
+      val (p0, e0, s0, d0) = random.head
+      val edges = random :+ ((p0, e0, d0, d0)) // a self-loop on a root
+      val picked = for {
+        p <- Seq("a", "b"); e <- 0L to 3L; _ <- 0 until 1 + rnd.nextInt(3)
+      } yield (p, e, rnd.nextInt(8))
+      // a duplicate root, and a root that another root reaches in one hop
+      val roots = picked ++ Seq(picked.head, (p0, e0, s0), (p0, e0, d0))
+      val edgeDf = edges.map { case (p, e, s, d) => (p, e, s, d, 1.0) }
+        .toDF("process", "event_id", "src", "dst", "weight")
+      val rootDf = roots.toDF("process", "event_id", "vtx")
+      for (depth <- 0 to 5) {
+        val got = Ancestry.descendants(edgeDf, rootDf, depth).as[(String, Long, Int)].collect()
+        val want = reference(edges, roots, depth)
+        assert(got.length == got.toSet.size, s"seed $seed depth $depth: duplicate rows")
+        assert(got.toSet == want, s"seed $seed depth $depth")
+      }
+    }
   }
 }

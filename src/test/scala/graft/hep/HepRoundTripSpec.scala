@@ -185,6 +185,20 @@ class HepRoundTripSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[IllegalArgumentException] { new HepWriter(spark, d2) }
   }
 
+  test("a process key opened twice in one writer is refused") {
+    val d = dir + "-dupkey"
+    val w = new HepWriter(spark, d, evtsPerChunk = 2)
+    val p = w.newProcess("x")
+    for (_ <- 0 until 3) p.commitEvent(p.newEvent().setPdg(Array(11)))
+    val e = intercept[IllegalArgumentException] { w.newProcess("x") }
+    assert(e.getMessage.contains("process x is already open"))
+    // the first builder is kept: its flushed and pending events all land
+    w.close()
+    val x = new HepReader(spark, d).process("x")
+    assert(x.length == 3)
+    assert(x.particles.select("event_id").collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 1L, 2L))
+  }
+
   test("per-store compression codec reaches the parquet files") {
     val d2 = dir + "-gz"
     val w = new HepWriter(spark, d2, evtsPerChunk = 10, compression = "gzip")
