@@ -72,7 +72,8 @@ object Demo {
       .orderBy("event_id").show(3)
     println("DEMO typed custom data of event 11 (dtype-tagged):")
     ev.custom("hit_ids").show(1, truncate = false)
-    println("DEMO small-files maintenance (compact, one file per chunk):")
+    println("DEMO small-files maintenance (compact; the writer already " +
+      "leaves one file per chunk, so this store stays as it is):")
     val (nb, na) = HepMaintenance.compact(spark, dir, ParticlesTable)
     println(s"DEMO particles files: $nb -> $na")
     println(s"DEMO still addressable post-compact: event 11 count=" +

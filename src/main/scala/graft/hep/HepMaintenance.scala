@@ -6,12 +6,13 @@ import org.apache.spark.sql.functions.col
 import Schemas._
 
 /** Store maintenance the reference cannot express (single-file h5py has no
-  * small-files problem; a 100 TB parquet store does): the chunked writer
-  * appends one parquet file batch per flush AND per input slice, so a
-  * long-lived ingest leaves (process, chunk) directories holding many
-  * small files — and small files are the classic scan killer at scale
-  * (per-file open/footer cost, starved vectorized reads, bloated
-  * InMemoryFileIndex listings on the driver).
+  * small-files problem; a 100 TB parquet store does). [[HepWriter]] itself
+  * leaves one file per (process, chunk) directory, but stores written by
+  * earlier writers (one file per chunk AND per input slice), by other
+  * producers, or split by `maxRecordsPerFile` hold many small files — and
+  * small files are the classic scan killer at scale (per-file open/footer
+  * cost, starved vectorized reads, bloated InMemoryFileIndex listings on
+  * the driver).
   *
   * `compact` rewrites a member table so every (process, chunk) directory
   * holds ONE file (up to `maxRecordsPerFile`): a single

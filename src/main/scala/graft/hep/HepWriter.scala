@@ -10,10 +10,22 @@ import Schemas._
   *
   * The reference's streaming-shaped contract — `new_process` → per-event
   * writer contexts fed by a generator (`write/hdf.py:493-516`) — maps to
-  * builders that buffer events and flush chunk-sized partitioned parquet
-  * appends: one append per `evtsPerChunk` events, so file sizes stay
-  * healthy at scale and `chunk` partition pruning reproduces the
-  * reference's O(1) `divmod` addressing (`read/hdf.py:454-466`).
+  * builders that buffer events and flush one chunk at a time: every
+  * `evtsPerChunk` events, each member table gets ONE parquet file in its
+  * `(process, chunk)` directory, rows in the builder's `(event_id, idx)`
+  * order. The chunk is the reference's `evt-set-{chunk}` unit
+  * (`write/hdf.py:439-445`), so the layout does not depend on the writing
+  * machine's core count, `chunk` partition pruning reproduces the
+  * reference's O(1) `divmod` addressing (`read/hdf.py:454-466`), and
+  * row-group statistics can skip inside a large chunk. It is also the
+  * layout [[HepMaintenance.compact]] produces.
+  *
+  * A flush appends the chunk's member tables (particles, edges, events,
+  * custom) concurrently through [[graft.Par.all]]: each leg writes its own
+  * table root. Successive flushes, the processes in `close()` and the
+  * `processes`/`_meta.json` finalization stay sequential, because two
+  * appends into the SAME table root share `<root>/_temporary/0` and the
+  * first job commit can delete the other's staged files.
   *
   * Validation reproduces the reference's write-time invariants (§2.3 F5):
   * the first particle column fixes `numPcls` and later columns must match
@@ -177,6 +189,7 @@ final class HepWriter(
 
     /** Opens the next event (monotonic event_id, like `_evt_idx`). */
     def newEvent(): EventBuilder = {
+      ensureOpen()
       val b = new EventBuilder(key, nextEventId)
       nextEventId += 1
       b
@@ -184,6 +197,7 @@ final class HepWriter(
 
     /** Commits one finished event; flushes a chunk when full. */
     def commitEvent(b: EventBuilder): Unit = {
+      ensureOpen()
       pending += b
       numEvts += 1
       if (pending.size >= evtsPerChunk) flush()
@@ -232,27 +246,39 @@ final class HepWriter(
             v.longs.toSeq, v.grid.map(_.toSeq).toSeq)
         })
 
+      // a flush holds exactly one chunk (event ids are monotonic and a
+      // flush fires every evtsPerChunk events), so coalesce(1) writes one
+      // file per (process, chunk) directory in the builder's row order
       def append[T <: Product : org.apache.spark.sql.Encoder](
-          rows: Seq[T], table: String): Unit = {
-        if (rows.isEmpty) return
-        // per-store codec, the parquet counterpart of the reference's
-        // per-dataset gzip/lzf choice (write/hdf.py:552-564); zstd default
-        spark.createDataset(rows).toDF()
-          .withColumn("chunk", expr(s"event_id div $evtsPerChunk"))
-          .write.mode(SaveMode.Append)
-          .option("compression", compression)
-          .options(levelOpts)
-          .partitionBy("process", "chunk")
-          .parquet(s"$path/$table")
-      }
-      append(particles, ParticlesTable)
-      append(edgeRows, EdgesTable)
-      append(eventRows, EventsTable)
-      append(customRows, CustomTable)
+          rows: Seq[T], table: String): () => Unit = () =>
+        if (rows.nonEmpty)
+          // per-store codec, the parquet counterpart of the reference's
+          // per-dataset gzip/lzf choice (write/hdf.py:552-564); zstd default
+          spark.createDataset(rows).toDF().coalesce(1)
+            .withColumn("chunk", expr(s"event_id div $evtsPerChunk"))
+            .write.mode(SaveMode.Append)
+            .option("compression", compression)
+            .options(levelOpts)
+            .partitionBy("process", "chunk")
+            .parquet(s"$path/$table")
+
+      // the legs write disjoint table roots, so they may run concurrently;
+      // two appends into one root share <root>/_temporary/0 and the first
+      // job commit can delete the other's staged files, which is why
+      // flushes themselves never overlap
+      graft.Par.all(
+        append(particles, ParticlesTable),
+        append(edgeRows, EdgesTable),
+        append(eventRows, EventsTable),
+        append(customRows, CustomTable))
     }
   }
 
   private val procs = mutable.LinkedHashMap.empty[String, ProcessBuilder]
+  private var closed = false
+
+  private def ensureOpen(): Unit =
+    if (closed) throw new IllegalStateException(s"hep writer for $path is closed")
 
   /** Opens a new process group (reference `new_process`). A key already
     * opened in this writer is refused, as h5py's `create_group` refuses an
@@ -260,6 +286,7 @@ final class HepWriter(
     * first one's flushed chunks.
     */
   def newProcess(key: String): ProcessBuilder = {
+    ensureOpen()
     require(!procs.contains(key), s"process $key is already open in this writer")
     val b = new ProcessBuilder(key)
     procs(key) = b
@@ -268,8 +295,14 @@ final class HepWriter(
 
   /** Finalizes the store: flushes all chunks and writes the `processes`
     * metadata table (num_evts finalized at close, like `write/hdf.py:456`).
+    * A second call is a no-op, as h5py's `File.close()` is; once closed,
+    * `newProcess`, `newEvent` and `commitEvent` throw
+    * `IllegalStateException`. A close that fails part-way still closes the
+    * writer and leaves the store without its `_meta.json` sidecar.
     */
   def close(): Unit = {
+    if (closed) return
+    closed = true
     import spark.implicits._
     procs.values.foreach(_.flush())
     val metas = procs.values.map(p =>

@@ -13,8 +13,7 @@ class HepMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("compact collapses per-flush small files, preserves data + addressing") {
     val dir = Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "hepcompact").toString + "/store"
-    // evtsPerChunk=5 over 40 events → 8 chunks; every flush writes a file
-    // batch per input slice, so chunk dirs accumulate several small files
+    // evtsPerChunk=5 over 40 events → 8 chunks
     val w = new HepWriter(spark, dir, evtsPerChunk = 5)
     val p = w.newProcess("proc")
     for (e <- 0 until 40) {
@@ -23,6 +22,15 @@ class HepMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
       p.commitEvent(b)
     }
     w.close()
+    // the writer leaves one file per chunk; fragment particles the way
+    // writers that wrote one file per input slice did: a round-robin
+    // repartition(4) spreads every chunk over four task files
+    val frag = dir + "-frag"
+    spark.read.parquet(s"$dir/particles").repartition(4)
+      .write.partitionBy("process", "chunk").parquet(frag)
+    val particlesDir = new java.io.File(s"$dir/particles")
+    org.apache.commons.io.FileUtils.deleteDirectory(particlesDir)
+    org.apache.commons.io.FileUtils.moveDirectory(new java.io.File(frag), particlesDir)
 
     val beforeRows = spark.read.parquet(s"$dir/particles")
       .orderBy("event_id", "idx").collect().map(_.toString).toSeq

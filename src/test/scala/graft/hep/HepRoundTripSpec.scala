@@ -363,4 +363,91 @@ class HepRoundTripSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(bad.isEmpty, bad.mkString("; "))
     } finally pool.shutdownNow()
   }
+
+  test("a second close is a no-op and a closed writer refuses events") {
+    val d = dir + "-closed"
+    val w = new HepWriter(spark, d, evtsPerChunk = 2)
+    val p = w.newProcess("x")
+    for (_ <- 0 until 3) p.commitEvent(p.newEvent().setPdg(Array(11, 12)))
+    val late = p.newEvent().setPdg(Array(13))
+    w.close()
+    w.close()
+    assert(spark.read.parquet(s"$d/$ProcessesTable").count() == 1,
+      "a second close appended another copy of the processes rows")
+    intercept[IllegalStateException] { w.newProcess("y") }
+    intercept[IllegalStateException] { p.newEvent() }
+    intercept[IllegalStateException] { p.commitEvent(late) }
+    val x = new HepReader(spark, d).process("x")
+    assert(x.length == 3)
+    assert(x.particles.count() == 6)
+    assert(spark.read.parquet(s"$d/$ParticlesTable").count() == 6)
+  }
+
+  test("every (table, process, chunk) directory holds one file in (event_id, idx) order") {
+    val d = dir + "-layout"
+    val w = new HepWriter(spark, d, evtsPerChunk = 5)
+    val p = w.newProcess("lay")
+    for (e <- 0 until 40) {
+      val b = p.newEvent()
+      mkEvent(b, n = 4 + (e % 3), seedBase = e.toLong)
+      p.commitEvent(b)
+    }
+    w.close()
+    def dataFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(dataFiles)
+      else if (f.getName.startsWith("_") || f.getName.startsWith(".")) Nil
+      else Seq(f)
+    for (t <- Seq(ParticlesTable, EdgesTable, EventsTable, CustomTable);
+         c <- 0 until 8) {
+      val chunkDir = new java.io.File(s"$d/$t/process=lay/chunk=$c")
+      val files = dataFiles(chunkDir)
+      assert(files.size == 1, s"$chunkDir holds ${files.size} data files")
+    }
+    for (f <- dataFiles(new java.io.File(s"$d/$ParticlesTable"))) {
+      val keys = spark.read.parquet(f.getPath).select("event_id", "idx")
+        .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
+      assert(keys == keys.sorted, s"$f is not in (event_id, idx) order")
+      assert(keys.map(_._1).distinct.size == 5)
+    }
+    for (t <- Seq(ParticlesTable, EdgesTable, EventsTable, CustomTable)) {
+      val (before, after) = HepMaintenance.compact(spark, d, t)
+      assert(before == 8 && after == 8, s"$t: compact found $before -> $after files")
+    }
+  }
+
+  test("a failed flush leg rethrows its own exception and leaves no job running") {
+    // the edges leg fails: its table root is a regular file
+    def writerWithBlockedEdges(d: String): HepWriter = {
+      val w = new HepWriter(spark, d, evtsPerChunk = 2)
+      new java.io.File(d).mkdirs()
+      Files.write(java.nio.file.Paths.get(s"$d/$EdgesTable"), Array[Byte](1))
+      w
+    }
+    def commitOne(p: HepWriter#ProcessBuilder): Unit =
+      p.eventIter(Seq(0)) { (b, _) => b.setPdg(Array(11, 12)).setEdges(Array((0, 1))) }
+    def noActiveJobs(): Unit =
+      assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+
+    val d1 = dir + "-failcommit"
+    val p1 = writerWithBlockedEdges(d1).newProcess("f")
+    commitOne(p1)
+    val e1 = intercept[Throwable] { commitOne(p1) } // chunk flush
+    noActiveJobs()
+    val d2 = dir + "-failclose"
+    val w2 = writerWithBlockedEdges(d2)
+    val p2 = w2.newProcess("f")
+    commitOne(p2)
+    val e2 = intercept[Throwable] { w2.close() } // final partial chunk
+    noActiveJobs()
+    // the exception a direct write into the blocked root raises
+    val expected = intercept[Throwable] {
+      import spark.implicits._
+      Seq(EdgeRow("p", 0L, 0, 1, 1.0)).toDS().write
+        .mode(org.apache.spark.sql.SaveMode.Append).parquet(s"$d1/$EdgesTable")
+    }.getClass
+    for (e <- Seq(e1, e2)) {
+      assert(!e.isInstanceOf[java.util.concurrent.ExecutionException], e)
+      assert(e.getClass == expected, s"expected $expected, got $e")
+    }
+  }
 }
