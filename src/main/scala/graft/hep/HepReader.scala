@@ -17,13 +17,21 @@ import Schemas._
   * several of them — a chunk written in one row group is read whole and
   * filtered.
   *
+  * The `_meta.json` sidecar is the store's commit marker: every producer
+  * writes it last ([[HepWriter.close]], `tools/hdf5_to_parquet.py`), as
+  * the reference's finalizer writes the file attrs last
+  * (`write/hdf.py:571-576`). A store without it was never finalized — a
+  * writer that failed or never closed — and may lack rows, so the
+  * constructor refuses it with an `IllegalArgumentException` instead of
+  * guessing its `evts_per_chunk`.
+  *
   * A reader is a snapshot of its store, like the reference's open
-  * `h5py.File`: each member table's schema and file listing are resolved
-  * once, at its first use; the `processes` metadata is collected once,
-  * after which [[process]] is a map lookup that starts no job and
-  * [[processes]] is a local Dataset of the same rows; the
-  * `_meta.json` sidecar is read once (the reference's per-open attr
-  * cache, `read/hdf.py:437`). A lookup therefore pays only its own scan.
+  * `h5py.File`: the sidecar is read once, at construction (the
+  * reference's per-open attr cache, `read/hdf.py:437`); each member
+  * table's schema and file listing are resolved once, at its first use;
+  * the `processes` metadata is collected once, after which [[process]] is
+  * a map lookup that starts no job and [[processes]] is a local Dataset
+  * of the same rows. A lookup therefore pays only its own scan.
   * Files written or rewritten after a table's first use (a store rebuilt
   * in place, [[HepMaintenance.compact]]) are not seen: open a new reader.
   * A table whose open fails is not remembered, so the next access retries
@@ -69,11 +77,14 @@ final class HepReader(spark: SparkSession, path: String) {
   /** File-level `evts_per_chunk` attr from the `_meta.json` sidecar, read
     * through the Hadoop `FileSystem` of the store's path (works on any
     * scheme — a `java.io.File` read would silently miss the sidecar on
-    * HDFS/S3 and mis-address every chunk of a non-default store).
+    * HDFS/S3 and refuse every store).
     */
-  lazy val evtsPerChunk: Int =
+  val evtsPerChunk: Int =
     HadoopIo.readString(spark, s"$path/_meta.json") match {
-      case None => DefaultEvtsPerChunk
+      case None =>
+        throw new IllegalArgumentException(
+          s"$path/_meta.json is missing: the hep store at $path was never " +
+            "finalized (its writer failed or did not close), so it may lack rows")
       case Some(s) =>
         "\"evts_per_chunk\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(s)
           .map(_.group(1).toInt).getOrElse(DefaultEvtsPerChunk)

@@ -1,9 +1,20 @@
 package graft.hep
 
+import java.io.IOException
+import java.util.UUID
 import scala.collection.mutable
-import org.apache.spark.sql.{SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
-import HepWriter.CustomData
+import scala.reflect.runtime.universe.TypeTag
+import scala.util.Try
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.StructType
+import HepWriter.{CustomData, Staged}
 import Schemas._
 
 /** Write path of the hep facade (reference S7-S11, `write/hdf.py`).
@@ -20,12 +31,29 @@ import Schemas._
   * row-group statistics can skip inside a large chunk. It is also the
   * layout [[HepMaintenance.compact]] produces.
   *
-  * A flush appends the chunk's member tables (particles, edges, events,
-  * custom) concurrently through [[graft.Par.all]]: each leg writes its own
-  * table root. Successive flushes, the processes in `close()` and the
-  * `processes`/`_meta.json` finalization stay sequential, because two
-  * appends into the SAME table root share `<root>/_temporary/0` and the
-  * first job commit can delete the other's staged files.
+  * The rows are already on the driver, so the driver writes the files
+  * itself, as the reference writes each chunk group in-process: ingest
+  * starts no Spark job. Each file goes through the `OutputWriter` of
+  * Spark's own parquet format (`ParquetFileFormat.prepareWrite`), which
+  * supplies the codec and its level, the footer's Spark schema and the
+  * file extension, so the files are those a Spark write job would leave;
+  * partition directories use Spark's escaping
+  * (`ExternalCatalogUtils.getPartitionPathString`). A file is written
+  * under a hidden (`.`-prefixed) temp name in its target directory,
+  * which readers skip, and renamed to a fresh `part-<uuid>` name. A flush
+  * first writes all of its chunk's files, then renames them, so a failed
+  * write leaves no visible file behind. The files of one flush are a few
+  * KB to a few MB each and are written one after another on the calling
+  * thread: with no job to wait on, there is no latency to overlap.
+  *
+  * `close()` writes the `processes` table, then the `_meta.json` sidecar
+  * LAST: the sidecar is the store's commit marker, and [[HepReader]]
+  * refuses a store without it. A failed flush or close poisons the
+  * writer: the store may lack that chunk's rows, so from then on
+  * `newProcess`, `newEvent`, `commitEvent` and `close` throw an
+  * `IllegalStateException` whose cause is the original failure, and the
+  * store is never finalized. The call that failed throws the failure
+  * itself.
   *
   * Validation reproduces the reference's write-time invariants (§2.3 F5):
   * the first particle column fixes `numPcls` and later columns must match
@@ -47,9 +75,9 @@ final class HepWriter(
 
   /** Codec-level writer options (reference S7 parity: `write/hdf.py:552-564`
     * exposes h5py's gzip level 1-9). Parquet's codec levels are reached
-    * through the Hadoop conf keys the file-format writer merges from
-    * DataFrameWriter options: zstd takes the numeric level directly
-    * (parquet-hadoop's `parquet.compression.codec.zstd.level`, range
+    * through Hadoop conf keys of the file-format writer: zstd takes the
+    * numeric level directly (parquet-hadoop's
+    * `parquet.compression.codec.zstd.level`, range
     * 1-22); Hadoop's zlib codec only exposes the three named levels, so a
     * 1-9 request maps to the nearest (1-3 → BEST_SPEED, 4-6 → DEFAULT,
     * 7-9 → BEST_COMPRESSION). Codecs without a level knob ignore it.
@@ -80,14 +108,86 @@ final class HepWriter(
   // truncates); here we refuse instead of truncating. Checked through the
   // path's Hadoop FileSystem so the guard holds on HDFS/S3, not just local
   // disk.
+  private val fs = HadoopIo.fs(spark, path)
   require({
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = HadoopIo.fs(spark, path)
-    !f.exists(p) ||
-      (f.getFileStatus(p).isDirectory && f.listStatus(p).isEmpty)
+    val p = new Path(path)
+    !fs.exists(p) ||
+      (fs.getFileStatus(p).isDirectory && fs.listStatus(p).isEmpty)
   }, s"hep store path $path already contains data (a finalized store, a " +
     "crashed writer's partial output, or a non-directory); write to a " +
     "fresh path — in-place append is not supported")
+
+  // per-store codec, the parquet counterpart of the reference's
+  // per-dataset gzip/lzf choice (write/hdf.py:552-564); zstd default
+  private val writeOpts = Map("compression" -> compression) ++ levelOpts
+
+  /** Writes one member table's files through the `OutputWriter` of
+    * Spark's parquet format: rows are encoded by their `ExpressionEncoder`
+    * and, for a partitioned table, lose the `process` column, which the
+    * directory carries. Built once per writer and table.
+    */
+  private final class TableSink[T <: Product : TypeTag](
+      table: String, partitioned: Boolean) {
+    private val encoder = ExpressionEncoder[T]()
+    private val toRow = encoder.createSerializer()
+    private val kept = encoder.schema.fields.indices
+      .filterNot(i => partitioned && encoder.schema(i).name == "process")
+    private val dataSchema = StructType(kept.map(encoder.schema(_)))
+    private val project = UnsafeProjection.create(kept.map { i =>
+      val f = encoder.schema(i)
+      BoundReference(i, f.dataType, f.nullable)
+    })
+    private val job =
+      Job.getInstance(spark.sessionState.newHadoopConfWithOptions(writeOpts))
+    private val factory =
+      new ParquetFileFormat().prepareWrite(spark, job, writeOpts, dataSchema)
+    private val context =
+      new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    private val ext = factory.getFileExtension(context)
+
+    /** Writes `rows` as one hidden file in `<table>/<subdir>`; a failed
+      * write deletes it.
+      */
+    def stage(rows: Seq[T], subdir: String = ""): Staged = {
+      val dir = new Path(s"$path/$table/$subdir")
+      val name = s"part-${UUID.randomUUID()}-c000$ext"
+      val tmp = new Path(dir, s".$name.tmp")
+      val out = factory.newInstance(tmp.toString, dataSchema, context)
+      try {
+        rows.foreach(r => out.write(project(toRow(r))))
+        out.close()
+      } catch {
+        case t: Throwable =>
+          Try(out.close())
+          Try(fs.delete(tmp, false))
+          throw t
+      }
+      Staged(tmp, new Path(dir, name))
+    }
+  }
+
+  private lazy val particleSink = new TableSink[Particle](ParticlesTable, partitioned = true)
+  private lazy val edgeSink = new TableSink[EdgeRow](EdgesTable, partitioned = true)
+  private lazy val eventSink = new TableSink[EventMeta](EventsTable, partitioned = true)
+  private lazy val customSink = new TableSink[CustomRow](CustomTable, partitioned = true)
+  private lazy val processSink = new TableSink[ProcessMeta](ProcessesTable, partitioned = false)
+
+  /** Writes every file, then makes them visible. If a write fails, the
+    * files already written are deleted; a failed rename throws.
+    */
+  private def commit(writes: Seq[() => Staged]): Unit = {
+    val staged = mutable.ArrayBuffer.empty[Staged]
+    try writes.foreach(w => staged += w())
+    catch {
+      case t: Throwable =>
+        staged.foreach(s => Try(fs.delete(s.tmp, false)))
+        throw t
+    }
+    staged.foreach { s =>
+      if (!fs.rename(s.tmp, s.dst))
+        throw new IOException(s"commit failed: rename ${s.tmp} -> ${s.dst}")
+    }
+  }
 
   /** Builder for one event (reference `HdfEventWriter`). */
   final class EventBuilder private[HepWriter] (
@@ -212,9 +312,7 @@ final class HepWriter(
         commitEvent(b)
       }
 
-    private[HepWriter] def flush(): Unit = {
-      if (pending.isEmpty) return
-      import spark.implicits._
+    private[HepWriter] def flush(): Unit = if (pending.nonEmpty) poisoning {
       val evts = pending.toVector
       pending.clear()
 
@@ -247,38 +345,32 @@ final class HepWriter(
         })
 
       // a flush holds exactly one chunk (event ids are monotonic and a
-      // flush fires every evtsPerChunk events), so coalesce(1) writes one
-      // file per (process, chunk) directory in the builder's row order
-      def append[T <: Product : org.apache.spark.sql.Encoder](
-          rows: Seq[T], table: String): () => Unit = () =>
-        if (rows.nonEmpty)
-          // per-store codec, the parquet counterpart of the reference's
-          // per-dataset gzip/lzf choice (write/hdf.py:552-564); zstd default
-          spark.createDataset(rows).toDF().coalesce(1)
-            .withColumn("chunk", expr(s"event_id div $evtsPerChunk"))
-            .write.mode(SaveMode.Append)
-            .option("compression", compression)
-            .options(levelOpts)
-            .partitionBy("process", "chunk")
-            .parquet(s"$path/$table")
-
-      // the legs write disjoint table roots, so they may run concurrently;
-      // two appends into one root share <root>/_temporary/0 and the first
-      // job commit can delete the other's staged files, which is why
-      // flushes themselves never overlap
-      graft.Par.all(
-        append(particles, ParticlesTable),
-        append(edgeRows, EdgesTable),
-        append(eventRows, EventsTable),
-        append(customRows, CustomTable))
+      // flush fires every evtsPerChunk events): one file per table
+      val dir = ExternalCatalogUtils.getPartitionPathString("process", key) + "/" +
+        ExternalCatalogUtils.getPartitionPathString(
+          "chunk", (evts.head.eventId / evtsPerChunk).toString)
+      def write[T <: Product](sink: => TableSink[T], rows: Seq[T]): Seq[() => Staged] =
+        if (rows.isEmpty) Nil else Seq(() => sink.stage(rows, dir))
+      commit(write(particleSink, particles) ++ write(edgeSink, edgeRows) ++
+        write(eventSink, eventRows) ++ write(customSink, customRows))
     }
   }
 
   private val procs = mutable.LinkedHashMap.empty[String, ProcessBuilder]
   private var closed = false
+  private var failure: Option[Throwable] = None
 
-  private def ensureOpen(): Unit =
+  private def ensureOpen(): Unit = {
+    for (t <- failure)
+      throw new IllegalStateException(
+        s"hep writer for $path failed earlier; the store is not finalized", t)
     if (closed) throw new IllegalStateException(s"hep writer for $path is closed")
+  }
+
+  /** Runs a step that writes to the store; its failure poisons the writer. */
+  private def poisoning(body: => Unit): Unit =
+    try body
+    catch { case t: Throwable => failure = Some(t); throw t }
 
   /** Opens a new process group (reference `new_process`). A key already
     * opened in this writer is refused, as h5py's `create_group` refuses an
@@ -293,31 +385,31 @@ final class HepWriter(
     b
   }
 
-  /** Finalizes the store: flushes all chunks and writes the `processes`
-    * metadata table (num_evts finalized at close, like `write/hdf.py:456`).
-    * A second call is a no-op, as h5py's `File.close()` is; once closed,
+  /** Finalizes the store: flushes all chunks, writes the `processes`
+    * metadata table (num_evts finalized at close, like `write/hdf.py:456`),
+    * then the `_meta.json` sidecar that marks the store finished. A second
+    * call is a no-op, as h5py's `File.close()` is; once closed,
     * `newProcess`, `newEvent` and `commitEvent` throw
-    * `IllegalStateException`. A close that fails part-way still closes the
-    * writer and leaves the store without its `_meta.json` sidecar.
+    * `IllegalStateException`. A close that fails poisons the writer, like
+    * a failed flush, and on a poisoned writer `close` throws
+    * `IllegalStateException` and writes nothing.
     */
   def close(): Unit = {
-    if (closed) return
+    if (closed && failure.isEmpty) return
+    ensureOpen()
     closed = true
-    import spark.implicits._
-    procs.values.foreach(_.flush())
-    val metas = procs.values.map(p =>
-      ProcessMeta(p.key, p.processString, p.signalPdgs, p.comE, p.eUnit,
-        p.numEvts, p.customMeta.toMap, p.inPcls, p.outPcls)).toSeq
-    if (metas.nonEmpty)
-      spark.createDataset(metas).write.mode(SaveMode.Append)
-        .option("compression", compression)
-        .options(levelOpts)
-        .parquet(s"$path/$ProcessesTable")
-    // file-level attrs (layout/version/evts_per_chunk, write/hdf.py:571-576)
-    val level = compressionLevel.map(l => s""","compression_level":$l""").getOrElse("")
-    val sidecar =
-      s"""{"layout":"graft-hep","version":1,"evts_per_chunk":$evtsPerChunk,"compression":"$compression"$level}"""
-    HadoopIo.writeString(spark, s"$path/_meta.json", sidecar)
+    poisoning {
+      procs.values.foreach(_.flush())
+      val metas = procs.values.map(p =>
+        ProcessMeta(p.key, p.processString, p.signalPdgs, p.comE, p.eUnit,
+          p.numEvts, p.customMeta.toMap, p.inPcls, p.outPcls)).toSeq
+      if (metas.nonEmpty) commit(Seq(() => processSink.stage(metas)))
+      // file-level attrs (layout/version/evts_per_chunk, write/hdf.py:571-576)
+      val level = compressionLevel.map(l => s""","compression_level":$l""").getOrElse("")
+      val sidecar =
+        s"""{"layout":"graft-hep","version":1,"evts_per_chunk":$evtsPerChunk,"compression":"$compression"$level}"""
+      HadoopIo.writeString(spark, s"$path/_meta.json", sidecar)
+    }
   }
 }
 
@@ -330,4 +422,7 @@ object HepWriter {
       doubles: Array[Double] = Array.empty,
       longs: Array[Long] = Array.empty,
       grid: Array[Array[Double]] = Array.empty)
+
+  /** A written file that is not visible yet: `tmp` is renamed to `dst`. */
+  private final case class Staged(tmp: Path, dst: Path)
 }

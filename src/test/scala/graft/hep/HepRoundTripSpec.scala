@@ -140,6 +140,8 @@ class HepRoundTripSpec extends AnyFunSuite with BeforeAndAfterAll {
     // simulate a store written before the decay columns existed
     spark.read.parquet(s"$d2/processes").drop("in_pcls", "out_pcls")
       .write.parquet(s"$d3/processes")
+    Files.copy(java.nio.file.Paths.get(s"$d2/_meta.json"),
+      java.nio.file.Paths.get(s"$d3/_meta.json"))
     val proc = new HepReader(spark, d3).process("zmumu")
     assert(proc.decay == Map("in_pcls" -> Nil, "out_pcls" -> Nil))
     assert(proc.processString == "p p > z")
@@ -429,8 +431,10 @@ class HepRoundTripSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
 
     val d1 = dir + "-failcommit"
-    val p1 = writerWithBlockedEdges(d1).newProcess("f")
+    val w1 = writerWithBlockedEdges(d1)
+    val p1 = w1.newProcess("f")
     commitOne(p1)
+    val spare = p1.newEvent().setPdg(Array(13))
     val e1 = intercept[Throwable] { commitOne(p1) } // chunk flush
     noActiveJobs()
     val d2 = dir + "-failclose"
@@ -448,6 +452,200 @@ class HepRoundTripSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (e <- Seq(e1, e2)) {
       assert(!e.isInstanceOf[java.util.concurrent.ExecutionException], e)
       assert(e.getClass == expected, s"expected $expected, got $e")
+    }
+    // the failed flush poisoned w1: every later call refuses, naming the
+    // failure as its cause, and nothing finalizes the torn store
+    val refusals = Seq[(String, () => Any)](
+      "close" -> (() => w1.close()),
+      "newProcess" -> (() => w1.newProcess("g")),
+      "newEvent" -> (() => p1.newEvent()),
+      "commitEvent" -> (() => p1.commitEvent(spare)))
+    for ((what, call) <- refusals) {
+      val e = intercept[IllegalStateException] { call() }
+      assert(e.getCause eq e1, s"$what: cause ${e.getCause}")
+    }
+    assert(!new java.io.File(s"$d1/_meta.json").exists())
+    assert(!new java.io.File(s"$d1/$ProcessesTable").exists())
+    val visible = Files.walk(java.nio.file.Paths.get(s"$d1/$ParticlesTable"))
+    try assert(visible.filter(f => Files.isRegularFile(f) &&
+        !f.getFileName.toString.startsWith(".")).count() == 0)
+    finally visible.close()
+  }
+
+  test("a finished store whose _meta.json is gone is refused") {
+    val d = dir + "-nosidecar"
+    writeBare(d, "x", Seq(2, 3))
+    assert(new HepReader(spark, d).process("x").length == 2)
+    Files.delete(java.nio.file.Paths.get(s"$d/_meta.json"))
+    val e = intercept[IllegalArgumentException] { new HepReader(spark, d) }
+    assert(e.getMessage.contains(s"$d/_meta.json"), e.getMessage)
+    assert(e.getMessage.contains("never finalized"), e.getMessage)
+  }
+
+  test("ingest starts no Spark job") {
+    val d = dir + "-nojob"
+    val w = new HepWriter(spark, d, evtsPerChunk = 5)
+    val j0 = jobs()
+    for (proc <- Seq("a", "b")) {
+      val p = w.newProcess(proc)
+      for (e <- 0 until 40) {
+        val b = p.newEvent()
+        mkEvent(b, n = 4 + (e % 3), seedBase = e.toLong)
+        p.commitEvent(b)
+      }
+    }
+    w.close()
+    assert(jobs() - j0 == 0, s"ingest started ${jobs() - j0} jobs")
+    val r = new HepReader(spark, d)
+    assert(r.process("b").length == 40)
+    val ev = r.process("b").event(37)
+    assert(ev.count == 4 + 37 % 3)
+    assert(ev.mask("signal").collect().count(_.getBoolean(1)) == 2)
+    assert(ev.custom("weights2").collect().head.getSeq[Double](0) ==
+      (0 until ev.count.toInt).map(_ * 2.0))
+  }
+
+  test("a process key that needs escaping round-trips through reader, parquet and SQL") {
+    val d = dir + "-escape"
+    val key = "p p>h/z=1%"
+    writeBare(d, key, Seq(3, 4, 5))
+    val partDir = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+      .getPartitionPathString("process", key)
+    assert(new java.io.File(s"$d/$ParticlesTable/$partDir").isDirectory)
+    val ev = new HepReader(spark, d).process(key).event(2)
+    assert(ev.pdg.collect().map(_.getInt(1)).sorted.toSeq == (0 until 5).map(11 + _))
+    assert(spark.read.parquet(s"$d/$ParticlesTable").select("process").distinct()
+      .collect().map(_.getString(0)).toSeq == Seq(key))
+    spark.conf.set("spark.sql.catalog.hepesc", classOf[graft.sources.HepCatalog].getName)
+    spark.conf.set("spark.sql.catalog.hepesc.path", d)
+    val rows = spark.sql(
+      "SELECT process, count(*) FROM hepesc.default.particles GROUP BY process").collect()
+    assert(rows.map(r => (r.getString(0), r.getLong(1))).toSeq == Seq((key, 12L)))
+  }
+
+  test("member-table schemas match the ones Spark's own writer produced") {
+    val d = dir + "-schema"
+    val w = new HepWriter(spark, d, evtsPerChunk = 2)
+    val p = w.newProcess("s").setProcessString("p p > s").setSignalPdgs(Seq(25))
+    p.setDecay(Seq(2212), Seq(25))
+    p.setCustomMeta("generator", "pythia")
+    for (e <- 0 until 3) {
+      val b = p.newEvent()
+      mkEvent(b, n = 3, seedBase = e.toLong)
+      b.setCustom("hits", Array(5L, e.toLong))
+      b.setCustom2d("cov", Array(Array(1.0, e.toDouble)))
+      p.commitEvent(b)
+    }
+    w.close()
+    // pinned from the Spark write job that wrote these tables before:
+    // the schema a read resolves, and the Spark schema in each file's
+    // footer, which keeps the writer's nullability (a read drops it)
+    val readSchemas = Map(
+      ParticlesTable ->
+        """{"type":"struct","fields":[{"name":"event_id","type":"long","nullable":true,"metadata":{}},
+        |{"name":"idx","type":"integer","nullable":true,"metadata":{}},
+        |{"name":"pmu","type":{"type":"struct","fields":[{"name":"x","type":"double","nullable":true,"metadata":{}},
+        |{"name":"y","type":"double","nullable":true,"metadata":{}},
+        |{"name":"z","type":"double","nullable":true,"metadata":{}},
+        |{"name":"e","type":"double","nullable":true,"metadata":{}}]},"nullable":true,"metadata":{}},
+        |{"name":"pdg","type":"integer","nullable":true,"metadata":{}},
+        |{"name":"status","type":"short","nullable":true,"metadata":{}},
+        |{"name":"helicity","type":"short","nullable":true,"metadata":{}},
+        |{"name":"color","type":{"type":"struct","fields":[{"name":"color","type":"integer","nullable":true,"metadata":{}},
+        |{"name":"anticolor","type":"integer","nullable":true,"metadata":{}}]},"nullable":true,"metadata":{}},
+        |{"name":"fin","type":"boolean","nullable":true,"metadata":{}},
+        |{"name":"masks","type":{"type":"map","keyType":"string","valueType":"boolean","valueContainsNull":true},"nullable":true,"metadata":{}},
+        |{"name":"process","type":"string","nullable":true,"metadata":{}},
+        |{"name":"chunk","type":"integer","nullable":true,"metadata":{}}]}""",
+      EdgesTable ->
+        """{"type":"struct","fields":[{"name":"event_id","type":"long","nullable":true,"metadata":{}},
+        |{"name":"src","type":"integer","nullable":true,"metadata":{}},
+        |{"name":"dst","type":"integer","nullable":true,"metadata":{}},
+        |{"name":"weight","type":"double","nullable":true,"metadata":{}},
+        |{"name":"process","type":"string","nullable":true,"metadata":{}},
+        |{"name":"chunk","type":"integer","nullable":true,"metadata":{}}]}""",
+      EventsTable ->
+        """{"type":"struct","fields":[{"name":"event_id","type":"long","nullable":true,"metadata":{}},
+        |{"name":"num_pcls","type":"long","nullable":true,"metadata":{}},
+        |{"name":"custom_meta","type":{"type":"map","keyType":"string","valueType":"string","valueContainsNull":true},"nullable":true,"metadata":{}},
+        |{"name":"process","type":"string","nullable":true,"metadata":{}},
+        |{"name":"chunk","type":"integer","nullable":true,"metadata":{}}]}""",
+      ProcessesTable ->
+        """{"type":"struct","fields":[{"name":"process","type":"string","nullable":true,"metadata":{}},
+        |{"name":"process_string","type":"string","nullable":true,"metadata":{}},
+        |{"name":"signal_pdgs","type":{"type":"array","elementType":"integer","containsNull":true},"nullable":true,"metadata":{}},
+        |{"name":"com_e","type":"double","nullable":true,"metadata":{}},
+        |{"name":"e_unit","type":"string","nullable":true,"metadata":{}},
+        |{"name":"num_evts","type":"long","nullable":true,"metadata":{}},
+        |{"name":"custom_meta","type":{"type":"map","keyType":"string","valueType":"string","valueContainsNull":true},"nullable":true,"metadata":{}},
+        |{"name":"in_pcls","type":{"type":"array","elementType":"integer","containsNull":true},"nullable":true,"metadata":{}},
+        |{"name":"out_pcls","type":{"type":"array","elementType":"integer","containsNull":true},"nullable":true,"metadata":{}}]}""",
+      CustomTable ->
+        """{"type":"struct","fields":[{"name":"event_id","type":"long","nullable":true,"metadata":{}},
+        |{"name":"name","type":"string","nullable":true,"metadata":{}},
+        |{"name":"values","type":{"type":"array","elementType":"double","containsNull":true},"nullable":true,"metadata":{}},
+        |{"name":"dtype","type":"string","nullable":true,"metadata":{}},
+        |{"name":"values_long","type":{"type":"array","elementType":"long","containsNull":true},"nullable":true,"metadata":{}},
+        |{"name":"values_2d","type":{"type":"array","elementType":{"type":"array","elementType":"double","containsNull":true},"containsNull":true},"nullable":true,"metadata":{}},
+        |{"name":"process","type":"string","nullable":true,"metadata":{}},
+        |{"name":"chunk","type":"integer","nullable":true,"metadata":{}}]}""")
+    val footerSchemas = Map(
+      ParticlesTable ->
+        """{"type":"struct","fields":[{"name":"event_id","type":"long","nullable":false,"metadata":{}},
+        |{"name":"idx","type":"integer","nullable":false,"metadata":{}},
+        |{"name":"pmu","type":{"type":"struct","fields":[{"name":"x","type":"double","nullable":false,"metadata":{}},
+        |{"name":"y","type":"double","nullable":false,"metadata":{}},
+        |{"name":"z","type":"double","nullable":false,"metadata":{}},
+        |{"name":"e","type":"double","nullable":false,"metadata":{}}]},"nullable":true,"metadata":{}},
+        |{"name":"pdg","type":"integer","nullable":false,"metadata":{}},
+        |{"name":"status","type":"short","nullable":false,"metadata":{}},
+        |{"name":"helicity","type":"short","nullable":false,"metadata":{}},
+        |{"name":"color","type":{"type":"struct","fields":[{"name":"color","type":"integer","nullable":false,"metadata":{}},
+        |{"name":"anticolor","type":"integer","nullable":false,"metadata":{}}]},"nullable":true,"metadata":{}},
+        |{"name":"fin","type":"boolean","nullable":false,"metadata":{}},
+        |{"name":"masks","type":{"type":"map","keyType":"string","valueType":"boolean","valueContainsNull":false},"nullable":true,"metadata":{}}]}""",
+      EdgesTable ->
+        """{"type":"struct","fields":[{"name":"event_id","type":"long","nullable":false,"metadata":{}},
+        |{"name":"src","type":"integer","nullable":false,"metadata":{}},
+        |{"name":"dst","type":"integer","nullable":false,"metadata":{}},
+        |{"name":"weight","type":"double","nullable":false,"metadata":{}}]}""",
+      EventsTable ->
+        """{"type":"struct","fields":[{"name":"event_id","type":"long","nullable":false,"metadata":{}},
+        |{"name":"num_pcls","type":"long","nullable":false,"metadata":{}},
+        |{"name":"custom_meta","type":{"type":"map","keyType":"string","valueType":"string","valueContainsNull":true},"nullable":true,"metadata":{}}]}""",
+      ProcessesTable ->
+        """{"type":"struct","fields":[{"name":"process","type":"string","nullable":true,"metadata":{}},
+        |{"name":"process_string","type":"string","nullable":true,"metadata":{}},
+        |{"name":"signal_pdgs","type":{"type":"array","elementType":"integer","containsNull":false},"nullable":true,"metadata":{}},
+        |{"name":"com_e","type":"double","nullable":false,"metadata":{}},
+        |{"name":"e_unit","type":"string","nullable":true,"metadata":{}},
+        |{"name":"num_evts","type":"long","nullable":false,"metadata":{}},
+        |{"name":"custom_meta","type":{"type":"map","keyType":"string","valueType":"string","valueContainsNull":true},"nullable":true,"metadata":{}},
+        |{"name":"in_pcls","type":{"type":"array","elementType":"integer","containsNull":false},"nullable":true,"metadata":{}},
+        |{"name":"out_pcls","type":{"type":"array","elementType":"integer","containsNull":false},"nullable":true,"metadata":{}}]}""",
+      CustomTable ->
+        """{"type":"struct","fields":[{"name":"event_id","type":"long","nullable":false,"metadata":{}},
+        |{"name":"name","type":"string","nullable":true,"metadata":{}},
+        |{"name":"values","type":{"type":"array","elementType":"double","containsNull":false},"nullable":true,"metadata":{}},
+        |{"name":"dtype","type":"string","nullable":true,"metadata":{}},
+        |{"name":"values_long","type":{"type":"array","elementType":"long","containsNull":false},"nullable":true,"metadata":{}},
+        |{"name":"values_2d","type":{"type":"array","elementType":{"type":"array","elementType":"double","containsNull":false},"containsNull":true},"nullable":true,"metadata":{}}]}""")
+    def pinned(s: String): String = s.stripMargin.replace("\n", "")
+    for (t <- readSchemas.keys) {
+      assert(spark.read.parquet(s"$d/$t").schema.json == pinned(readSchemas(t)), t)
+      val files = Files.walk(java.nio.file.Paths.get(s"$d/$t"))
+      try files.filter(f => f.toString.endsWith(".parquet") &&
+          !f.getFileName.toString.startsWith(".")).forEach { f =>
+        val in = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toString),
+            spark.sessionState.newHadoopConf()))
+        try assert(in.getFooter.getFileMetaData.getKeyValueMetaData
+            .get("org.apache.spark.sql.parquet.row.metadata") ==
+          pinned(footerSchemas(t)), f)
+        finally in.close()
+      }
+      finally files.close()
     }
   }
 }
