@@ -1,6 +1,9 @@
 package graft.hep
 
+import java.io.IOException
 import java.nio.charset.StandardCharsets
+import java.util.UUID
+import scala.util.Try
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -10,8 +13,7 @@ import org.apache.spark.sql.SparkSession
   *
   * The store layer must never touch `java.io.File`: a 100 TB deployment
   * keeps stores on HDFS/S3/ABFS where local-file calls silently see
-  * nothing — `evtsPerChunk` would quietly fall back to the default
-  * (mis-addressing chunks on stores written with a non-default value) and
+  * nothing — the reader would refuse every store as never finalized and
   * the writer's non-empty-target guard would pass vacuously. Resolving the
   * filesystem from the path + the session's Hadoop conf makes `file:`,
   * `hdfs:`, `s3a:` etc. behave identically (spec-verified through a
@@ -55,11 +57,27 @@ private[graft] object HadoopIo {
     }
   }
 
-  /** Atomic-enough sidecar write (single create, parents auto-created). */
+  /** Writes a small file whole or not at all: the content goes to a
+    * hidden temp name in the target's directory (parents auto-created),
+    * which is then renamed to `path`, so a reader never sees a partial
+    * file. `path` must not exist yet; a failed write or rename deletes the
+    * temp file and throws.
+    */
   def writeString(spark: SparkSession, path: String, content: String): Unit = {
-    val out = fs(spark, path).create(new Path(path), true)
-    try out.write(content.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    val dst = new Path(path)
+    val f = fs(spark, path)
+    val tmp = new Path(dst.getParent, s".${dst.getName}.${UUID.randomUUID()}.tmp")
+    try {
+      val out = f.create(tmp, false)
+      try out.write(content.getBytes(StandardCharsets.UTF_8))
+      finally out.close()
+      if (!f.rename(tmp, dst))
+        throw new IOException(s"commit failed: rename $tmp -> $dst")
+    } catch {
+      case t: Throwable =>
+        Try(f.delete(tmp, false))
+        throw t
+    }
   }
 
   /** Recursive delete; no-op when absent. */

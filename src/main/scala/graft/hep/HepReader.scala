@@ -23,7 +23,9 @@ import Schemas._
   * (`write/hdf.py:571-576`). A store without it was never finalized — a
   * writer that failed or never closed — and may lack rows, so the
   * constructor refuses it with an `IllegalArgumentException` instead of
-  * guessing its `evts_per_chunk`.
+  * guessing its `evts_per_chunk`; so is a sidecar without
+  * `evts_per_chunk`. Producers write the sidecar whole or not at all
+  * (under a temp name, then renamed), so a torn sidecar is never seen.
   *
   * A reader is a snapshot of its store, like the reference's open
   * `h5py.File`: the sidecar is read once, at construction (the
@@ -79,16 +81,15 @@ final class HepReader(spark: SparkSession, path: String) {
     * scheme — a `java.io.File` read would silently miss the sidecar on
     * HDFS/S3 and refuse every store).
     */
-  val evtsPerChunk: Int =
-    HadoopIo.readString(spark, s"$path/_meta.json") match {
-      case None =>
-        throw new IllegalArgumentException(
-          s"$path/_meta.json is missing: the hep store at $path was never " +
-            "finalized (its writer failed or did not close), so it may lack rows")
-      case Some(s) =>
-        "\"evts_per_chunk\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(s)
-          .map(_.group(1).toInt).getOrElse(DefaultEvtsPerChunk)
-    }
+  val evtsPerChunk: Int = {
+    def unfinalized(what: String) = new IllegalArgumentException(
+      s"$path/_meta.json $what: the hep store at $path was never " +
+        "finalized (its writer failed or did not close), so it may lack rows")
+    val sidecar = HadoopIo.readString(spark, s"$path/_meta.json")
+      .getOrElse(throw unfinalized("is missing"))
+    "\"evts_per_chunk\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(sidecar)
+      .map(_.group(1).toInt).getOrElse(throw unfinalized("has no evts_per_chunk"))
+  }
 
   final class ProcessReader private[HepReader] (val meta: ProcessMeta) {
     // eager metadata snapshot, like the reference's attr cache

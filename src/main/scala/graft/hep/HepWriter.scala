@@ -23,9 +23,12 @@ import Schemas._
   * writer contexts fed by a generator (`write/hdf.py:493-516`) — maps to
   * builders that buffer events and flush one chunk at a time: every
   * `evtsPerChunk` events, each member table gets ONE parquet file in its
-  * `(process, chunk)` directory, rows in the builder's `(event_id, idx)`
-  * order. The chunk is the reference's `evt-set-{chunk}` unit
-  * (`write/hdf.py:439-445`), so the layout does not depend on the writing
+  * `(process, chunk)` directory, rows in `(event_id, idx)` order. Every
+  * row lands in chunk `event_id / evtsPerChunk`: a flush whose events
+  * span two chunks (an event id opened but never committed, or events
+  * committed out of order) writes one file per chunk, so such a chunk may
+  * hold a file from each of two flushes. The chunk is the reference's
+  * `evt-set-{chunk}` unit (`write/hdf.py:439-445`), so the layout does not depend on the writing
   * machine's core count, `chunk` partition pruning reproduces the
   * reference's O(1) `divmod` addressing (`read/hdf.py:454-466`), and
   * row-group statistics can skip inside a large chunk. It is also the
@@ -41,10 +44,13 @@ import Schemas._
   * (`ExternalCatalogUtils.getPartitionPathString`). A file is written
   * under a hidden (`.`-prefixed) temp name in its target directory,
   * which readers skip, and renamed to a fresh `part-<uuid>` name. A flush
-  * first writes all of its chunk's files, then renames them, so a failed
-  * write leaves no visible file behind. The files of one flush are a few
-  * KB to a few MB each and are written one after another on the calling
-  * thread: with no job to wait on, there is no latency to overlap.
+  * first writes all of its files, then renames them, so a failed write
+  * leaves no visible file behind. The files of one flush are written one
+  * after another on the calling thread. The Spark write jobs this
+  * replaced ran a flush's tables concurrently, but each table cost a job;
+  * measured on 4 vCPUs, the sequential driver write was faster both with
+  * 16-event chunks of a few KB and with 1000-event chunks of a few MB
+  * (see CHANGES.md).
   *
   * `close()` writes the `processes` table, then the `_meta.json` sidecar
   * LAST: the sidecar is the store's commit marker, and [[HepReader]]
@@ -313,9 +319,17 @@ final class HepWriter(
       }
 
     private[HepWriter] def flush(): Unit = if (pending.nonEmpty) poisoning {
-      val evts = pending.toVector
+      val evts = pending.toVector.sortBy(_.eventId)
       pending.clear()
+      // a flush holds one chunk unless an event id was never committed or
+      // events were committed out of order; each chunk it holds gets its
+      // own files, and all of them become visible in one commit
+      commit(evts.groupBy(_.eventId / evtsPerChunk).toSeq.sortBy(_._1)
+        .flatMap { case (chunk, inChunk) => chunkWrites(chunk, inChunk) })
+    }
 
+    /** The writes of one chunk's events: one file per member table. */
+    private def chunkWrites(chunk: Long, evts: Seq[EventBuilder]): Seq[() => Staged] = {
       val particles = evts.flatMap { b =>
         val n = b.count
         def pm(i: Int) = if (i < b.pmu.length) b.pmu(i) else Pmu(0, 0, 0, 0)
@@ -344,15 +358,12 @@ final class HepWriter(
             v.longs.toSeq, v.grid.map(_.toSeq).toSeq)
         })
 
-      // a flush holds exactly one chunk (event ids are monotonic and a
-      // flush fires every evtsPerChunk events): one file per table
       val dir = ExternalCatalogUtils.getPartitionPathString("process", key) + "/" +
-        ExternalCatalogUtils.getPartitionPathString(
-          "chunk", (evts.head.eventId / evtsPerChunk).toString)
+        ExternalCatalogUtils.getPartitionPathString("chunk", chunk.toString)
       def write[T <: Product](sink: => TableSink[T], rows: Seq[T]): Seq[() => Staged] =
         if (rows.isEmpty) Nil else Seq(() => sink.stage(rows, dir))
-      commit(write(particleSink, particles) ++ write(edgeSink, edgeRows) ++
-        write(eventSink, eventRows) ++ write(customSink, customRows))
+      write(particleSink, particles) ++ write(edgeSink, edgeRows) ++
+        write(eventSink, eventRows) ++ write(customSink, customRows)
     }
   }
 

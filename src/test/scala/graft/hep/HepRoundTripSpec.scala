@@ -476,10 +476,49 @@ class HepRoundTripSpec extends AnyFunSuite with BeforeAndAfterAll {
     val d = dir + "-nosidecar"
     writeBare(d, "x", Seq(2, 3))
     assert(new HepReader(spark, d).process("x").length == 2)
+    // the sidecar was renamed into place: no temp file is left beside it
+    val names = new java.io.File(d).list().toSeq
+    assert(!names.exists(_.endsWith(".tmp")), names)
     Files.delete(java.nio.file.Paths.get(s"$d/_meta.json"))
     val e = intercept[IllegalArgumentException] { new HepReader(spark, d) }
     assert(e.getMessage.contains(s"$d/_meta.json"), e.getMessage)
     assert(e.getMessage.contains("never finalized"), e.getMessage)
+    // a sidecar without evts_per_chunk is refused too, not read as the
+    // default (its stale checksum goes first, or the read fails on it)
+    Files.delete(java.nio.file.Paths.get(s"$d/._meta.json.crc"))
+    Files.write(java.nio.file.Paths.get(s"$d/_meta.json"), "{}".getBytes)
+    val e2 = intercept[IllegalArgumentException] { new HepReader(spark, d) }
+    assert(e2.getMessage.contains("never finalized"), e2.getMessage)
+  }
+
+  test("a flush that spans two chunks writes each event under its own chunk") {
+    val d = dir + "-span"
+    val w = new HepWriter(spark, d, evtsPerChunk = 2)
+    val p = w.newProcess("x")
+    // event 0 is dropped by its caller after a failed setter: a gap
+    intercept[IllegalArgumentException] {
+      p.newEvent().setPdg(Array(11)).setStatus(Array[Short](1, 2))
+    }
+    def filled(b: w.EventBuilder): w.EventBuilder =
+      b.setPdg(Array.fill(b.eventId.toInt + 1)(b.eventId.toInt)).setEdges(Array((0, 1)))
+    p.commitEvent(filled(p.newEvent())) // 1, chunk 0
+    p.commitEvent(filled(p.newEvent())) // 2, chunk 1: flushes {1, 2}
+    val (b3, b4) = (filled(p.newEvent()), filled(p.newEvent()))
+    p.commitEvent(b4) // out of order: flushes {4, 3}
+    p.commitEvent(b3)
+    w.close()
+    val x = new HepReader(spark, d).process("x")
+    assert(x.length == 4)
+    for (e <- 1L to 4L) {
+      val ev = x.event(e)
+      assert(ev.count == e + 1, s"event $e")
+      assert(ev.pdg.collect().map(_.getInt(1)).toSeq == Seq.fill(e.toInt + 1)(e.toInt))
+    }
+    for (t <- Seq(ParticlesTable, EdgesTable, EventsTable)) {
+      val misplaced = spark.read.parquet(s"$d/$t")
+        .where("chunk != event_id div 2").count()
+      assert(misplaced == 0, s"$t: $misplaced rows outside their chunk")
+    }
   }
 
   test("ingest starts no Spark job") {

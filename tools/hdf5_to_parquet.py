@@ -258,11 +258,15 @@ def convert(h5, out_dir, compression="zstd"):
                    f"{out_dir}/processes/part-00000.parquet",
                    compression=compression)
 
-    # sidecar LAST: its presence marks a finalized store (HepWriter.close)
-    with open(f"{out_dir}/_meta.json", "w") as f:
+    # sidecar LAST: its presence marks a finalized store (HepWriter.close).
+    # Written under a hidden temp name and renamed, so a reader sees the
+    # whole sidecar or none.
+    tmp = f"{out_dir}/._meta.json.tmp"
+    with open(tmp, "w") as f:
         f.write(json.dumps({"layout": "graft-hep", "version": 1,
                             "evts_per_chunk": epc,
                             "compression": compression}))
+    os.replace(tmp, f"{out_dir}/_meta.json")
     return pad  # exposed for tests
 
 
