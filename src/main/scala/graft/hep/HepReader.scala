@@ -10,12 +10,18 @@ import Schemas._
   * Every projection below is a lazy DataFrame: only the accessed columns
   * reach the parquet reader (column pruning = the reference's lazy
   * per-column reads, `read/hdf.py:262-316`). A point lookup's process and
-  * chunk predicates prune partitions, so only that chunk's files are
-  * opened (= the reference's O(1) `divmod` B-tree descent,
-  * `read/hdf.py:454-466`); its event_id predicate is pushed to the
-  * parquet scan, which skips row groups only when a chunk file holds
-  * several of them — a chunk written in one row group is read whole and
-  * filtered.
+  * chunk predicates prune partitions to that chunk's directory (= the
+  * reference's O(1) `divmod` B-tree descent, `read/hdf.py:454-466`), and
+  * the chunk is read on the calling thread, starting no Spark job: each
+  * member table is opened with the [[HepLookup]] marker option, so the
+  * planner reads any scan whose partition filters leave one directory of
+  * at most [[HepLookup.MaxDriverReadBytes]] on the driver, with the
+  * event_id predicate pushed to that parquet read (it skips row groups
+  * only when a chunk file holds several; a chunk written in one row group
+  * is decoded whole and filtered). A scan over several directories or a
+  * larger one (a process scan, an oversized custom dataset) plans the
+  * ordinary parquet scan. The strategy is installed on the session when
+  * the reader opens its first table.
   *
   * The `_meta.json` sidecar is the store's commit marker: every producer
   * writes it last ([[HepWriter.close]], `tools/hdf5_to_parquet.py`), as
@@ -33,7 +39,7 @@ import Schemas._
   * table's schema and file listing are resolved once, at its first use;
   * the `processes` metadata is collected once, after which [[process]] is
   * a map lookup that starts no job and [[processes]] is a local Dataset
-  * of the same rows. A lookup therefore pays only its own scan.
+  * of the same rows. A lookup therefore pays only its own chunk read.
   * Files written or rewritten after a table's first use (a store rebuilt
   * in place, [[HepMaintenance.compact]]) are not seen: open a new reader.
   * A table whose open fails is not remembered, so the next access retries
@@ -48,7 +54,10 @@ final class HepReader(spark: SparkSession, path: String) {
   private val opened = mutable.Map.empty[String, DataFrame]
 
   private def table(name: String): DataFrame = synchronized {
-    opened.getOrElseUpdate(name, spark.read.parquet(s"$path/$name"))
+    opened.getOrElseUpdate(name, {
+      HepLookup.install(spark)
+      spark.read.option(HepLookup.Marker, "true").parquet(s"$path/$name")
+    })
   }
 
   /** The `processes` table, collected once. Stores written before the
@@ -134,7 +143,7 @@ final class HepReader(spark: SparkSession, path: String) {
     def events: DataFrame = inProc(table(EventsTable))
 
     /** Point lookup (reference `proc[evt_num]`): process + chunk partition
-      * pruning + event_id pushed to the scan.
+      * pruning, then one chunk read on the driver with event_id pushed to it.
       */
     def event(n: Long): EventReader =
       new EventReader(this, n, n / evtsPerChunk)

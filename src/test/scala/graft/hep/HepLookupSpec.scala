@@ -1,0 +1,187 @@
+package graft.hep
+
+import java.nio.file.Files
+import org.apache.spark.scheduler.graftaccess.Jobs
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.BeforeAndAfterAll
+import Schemas._
+
+/** The driver-side point lookup ([[HepLookup]]): same rows as a plain
+  * parquet read, no Spark job, the ordinary scan past its reach.
+  */
+class HepLookupSpec extends AnyFunSuite with BeforeAndAfterAll
+    with AdaptiveSparkPlanHelper {
+
+  lazy val spark: SparkSession = graft.EngineSession.local("4")
+  lazy val root: java.nio.file.Path =
+    Files.createTempDirectory(java.nio.file.Paths.get("target"), "heplookup")
+  val Procs = Seq("ttbar", "wjets")
+  val NumEvts = 12
+  val PerChunk = 5
+
+  /** 2 processes x 12 events at 5 events per chunk: chunks of 5, 5, 2. */
+  lazy val store: String = {
+    val d = root.resolve("store").toString
+    val w = new HepWriter(spark, d, evtsPerChunk = PerChunk)
+    for (name <- Procs) {
+      val p = w.newProcess(name)
+      for (e <- 0 until NumEvts) {
+        val b = p.newEvent()
+        val n = 3 + (e + name.length) % 4
+        val rnd = new scala.util.Random(e * 31L + name.length)
+        b.setPmu(Array.fill(n)(Pmu(rnd.nextDouble(), rnd.nextDouble(), rnd.nextDouble(), 1.0)))
+          .setPdg(Array.tabulate(n)(i => 11 + i + e))
+          .setStatus(Array.tabulate(n)(i => (i % 3).toShort))
+          .setHelicity(Array.tabulate(n)(i => (i % 2).toShort))
+          .setColor(Array.tabulate(n)(i => ColorPair(i, e)))
+          .setMask("final", Array.tabulate(n)(i => (i + e) % 2 == 0))
+          .setMask("signal", Array.tabulate(n)(_ < 2))
+        b.setEdges(Array.tabulate(n - 1)(i => (i, i + 1)))
+        b.setEdgeWeights(Array.tabulate(n - 1)(_ * 0.5 + e))
+        b.setCustom("wgt", Array.fill(n)(rnd.nextDouble()))
+        b.setCustom("hits", Array.tabulate(2)(i => e.toLong << (30 + i)))
+        b.setCustom2d("cov", Array(Array(e.toDouble), Array(1.0, 2.0)))
+        b.setCustomMeta("note", s"$name-$e")
+        p.commitEvent(b)
+      }
+    }
+    w.close()
+    d
+  }
+
+  override def afterAll(): Unit = spark.stop()
+
+  private def jobs(): Int = Jobs.submitted(spark.sparkContext)
+
+  private def sorted(rows: Array[Row]): Seq[String] = rows.map(_.toString).toSeq.sorted
+
+  private def lookups(plan: SparkPlan): Seq[HepLookupExec] =
+    collect(plan) { case l: HepLookupExec => l }
+
+  private def scans(plan: SparkPlan): Seq[FileSourceScanExec] =
+    collect(plan) { case s: FileSourceScanExec => s }
+
+  /** The same slice over an unmarked parquet read of one member table. */
+  private def plain(table: String, p: String, n: Long): DataFrame =
+    spark.read.parquet(s"$store/$table")
+      .where(col("process") === p && col("chunk") === n / PerChunk && col("event_id") === n)
+
+  test("a lookup returns the parquet path's rows and starts no job") {
+    val r = new HepReader(spark, store)
+    val warm = r.process(Procs.head).event(0) // opens the member tables
+    warm.particles.collect(); warm.edges.collect(); warm.custom("wgt").collect(); warm.count
+    var lookupJobs = 0
+    def counted[T](body: => T): T = {
+      val j0 = jobs()
+      val out = body
+      lookupJobs += jobs() - j0
+      out
+    }
+    def sel(cols: String*): DataFrame => DataFrame = _.select(cols.map(col): _*)
+    for (p <- Procs; n <- Seq(0L, 4L, 7L, 10L, 11L)) {
+      val ev = r.process(p).event(n)
+      val particles = plain(ParticlesTable, p, n)
+      val cases = Seq[(String, DataFrame, DataFrame)](
+        ("particles", ev.particles, particles),
+        ("pmu", ev.pmu, sel("idx", "pmu")(particles)),
+        ("pdg", ev.pdg, sel("idx", "pdg")(particles)),
+        ("status", ev.status, sel("idx", "status")(particles)),
+        ("helicity", ev.helicity, sel("idx", "helicity")(particles)),
+        ("colorCol", ev.colorCol, sel("idx", "color")(particles)),
+        ("finalMask", ev.finalMask, sel("idx", "fin")(particles)),
+        ("mask", ev.mask("signal"), particles.select(col("idx"),
+          coalesce(element_at(col("masks"), "signal"), lit(false)))),
+        ("finalParticles", ev.finalParticles, particles.where(col("fin"))),
+        ("edges", ev.edges, sel("src", "dst", "weight")(plain(EdgesTable, p, n)))) ++
+        Seq("wgt", "hits", "cov").map(c => (s"custom($c)", ev.custom(c),
+          sel("values", "values_long", "values_2d", "dtype")(
+            plain(CustomTable, p, n).where(col("name") === c))))
+      for ((what, got, want) <- cases) {
+        val rows = counted(got.collect())
+        assert(rows.nonEmpty, s"$p/$n $what")
+        assert(sorted(rows) == sorted(want.collect()), s"$p/$n $what")
+      }
+      val events = plain(EventsTable, p, n).collect()
+      assert(counted(ev.count) == events.head.getAs[Long]("num_pcls"), s"$p/$n count")
+      assert(counted(ev.customMeta) == events.head.getMap[String, String](
+        events.head.fieldIndex("custom_meta")).toMap, s"$p/$n customMeta")
+      assert(ev.customMeta("note") == s"$p-$n")
+    }
+    assert(lookupJobs == 0, s"lookups on an opened reader started $lookupJobs jobs")
+
+    // past num_evts: no chunk directory, no rows, no job
+    val past = r.process(Procs.head).event(NumEvts + PerChunk.toLong)
+    val j0 = jobs()
+    assert(past.particles.collect().isEmpty)
+    assert(past.edges.collect().isEmpty)
+    assert(past.count == 0L && past.customMeta.isEmpty)
+    assert(jobs() - j0 == 0, "a lookup past num_evts started a job")
+  }
+
+  test("a process scan over several chunks plans the parquet scan") {
+    val plan = new HepReader(spark, store).process(Procs.head).particles
+      .queryExecution.executedPlan
+    assert(scans(plan).nonEmpty && lookups(plan).isEmpty, plan.toString)
+  }
+
+  test("a chunk over the byte cap plans the parquet scan and returns its values") {
+    val d = root.resolve("big").toString
+    val n = 2400000 // random doubles in [0, 1) pack to ~7.6 bytes: ~18 MB > 16 MiB
+    val rnd = new scala.util.Random(7)
+    val big = Array.fill(n)(rnd.nextDouble())
+    val w = new HepWriter(spark, d, evtsPerChunk = PerChunk)
+    val p = w.newProcess("big")
+    val b = p.newEvent()
+    b.setPdg(Array(11, 13)).setCustom("big", big)
+    p.commitEvent(b)
+    w.close()
+    val ev = new HepReader(spark, d).process("big").event(0)
+    val customFiles = new java.io.File(s"$d/$CustomTable/process=big/chunk=0").listFiles()
+    assert(customFiles.map(_.length).sum > HepLookup.MaxDriverReadBytes)
+    val df = ev.custom("big")
+    val plan = df.queryExecution.executedPlan
+    assert(scans(plan).nonEmpty && lookups(plan).isEmpty, plan.toString)
+    assert(df.collect().head.getSeq[Double](0) == big.toSeq)
+    // the same event's small particle chunk still reads on the driver
+    assert(lookups(ev.pdg.queryExecution.executedPlan).size == 1)
+  }
+
+  test("a lookup under count, orderBy, a join and a union returns the parquet rows") {
+    val r = new HepReader(spark, store)
+    val (p, q) = (Procs.head, Procs.last)
+    val e4 = r.process(p).event(4)
+    val e7 = r.process(q).event(7)
+    val pl4 = plain(ParticlesTable, p, 4)
+    val pl7 = plain(ParticlesTable, q, 7)
+    assert(lookups(e4.particles.queryExecution.executedPlan).size == 1)
+    assert(e4.particles.count() == pl4.count())
+    assert(e4.pdg.orderBy(desc("idx")).collect().toSeq ==
+      pl4.select("idx", "pdg").orderBy(desc("idx")).collect().toSeq)
+    val joined = e4.pmu.join(e7.pdg, "idx")
+    assert(lookups(joined.queryExecution.executedPlan).size == 2)
+    assert(sorted(joined.collect()) ==
+      sorted(pl4.select("idx", "pmu").join(pl7.select("idx", "pdg"), "idx").collect()))
+    assert(sorted(e4.pdg.union(e7.pdg).collect()) ==
+      sorted(pl4.select("idx", "pdg").union(pl7.select("idx", "pdg")).collect()))
+    assert(e4.finalParticles.groupBy("fin").count().collect().toSeq ==
+      pl4.where(col("fin")).groupBy("fin").count().collect().toSeq)
+  }
+
+  test("the lookup posts its file, byte and row metrics") {
+    val ev = new HepReader(spark, store).process(Procs.head).event(7)
+    val df = ev.finalParticles
+    val rows = df.collect()
+    val node = lookups(df.queryExecution.executedPlan).head
+    val chunkDir = new java.io.File(s"$store/$ParticlesTable/process=${Procs.head}/chunk=1")
+    val files = chunkDir.listFiles().filterNot(f => f.getName.startsWith(".") || f.getName.startsWith("_"))
+    assert(files.length == 1)
+    assert(node.metrics("numFiles").value == 1L)
+    assert(node.metrics("filesSize").value == files.head.length())
+    assert(node.metrics("numOutputRows").value == rows.length.toLong)
+    assert(rows.nonEmpty)
+  }
+}
