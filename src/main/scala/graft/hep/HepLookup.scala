@@ -1,19 +1,26 @@
 package graft.hep
 
-import java.io.Closeable
 import scala.collection.mutable.ArrayBuffer
-import org.apache.spark.paths.SparkPath
+import org.apache.hadoop.mapred.{FileSplit, JobConf}
+import org.apache.hadoop.mapreduce.TaskAttemptID
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.FilterApi
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{ParquetInputFormat, ParquetRecordReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeSet, Expression, Literal, NamedExpression, Predicate, SubqueryExpression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeSet, Expression, JoinedRow, Literal, NamedExpression, Predicate, SubqueryExpression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.planning.PhysicalOperation
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.catalyst.util.truncatedString
+import org.apache.spark.sql.catalyst.util.{DateTimeUtils, truncatedString}
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.{LeafExecNode, SQLExecution, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, LogicalRelation, PartitionDirectory, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, HadoopFsRelation, LogicalRelation, PartitionDirectory, RecordReaderIterator}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFilters, ParquetFooterReader, ParquetOptions, ParquetReadSupport, ParquetWriteSupport}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.graftaccess.SourceFilters
 import org.apache.spark.sql.internal.SQLConf
@@ -59,7 +66,8 @@ private[hep] object HepLookup extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case PhysicalOperation(projects, filters,
           l @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _))
-        if fs.options.contains(Marker) && (projects ++ filters).forall(plannable) =>
+        if fs.options.contains(Marker) && fs.fileFormat.isInstanceOf[ParquetFileFormat] &&
+          (projects ++ filters).forall(plannable) =>
       val resolver = SQLConf.get.resolver
       val partitionColumns = l.resolve(fs.partitionSchema, resolver)
       val partitionSet = AttributeSet(partitionColumns)
@@ -89,16 +97,25 @@ private[hep] object HepLookup extends SparkStrategy {
 
 /** Reads one partition directory of a hep member table on the driver.
   *
-  * The files go through the relation's own parquet reader
-  * (`buildReaderWithPartitionValues`, row-returning, with the pushed
-  * filters), then every filter of the matched stack is evaluated and the
+  * Each file goes through the row reader that Spark's
+  * `ParquetFileFormat` builds for a task, built here on the calling
+  * thread with nothing broadcast: a Hadoop conf made per read from the
+  * session and the relation's options, carrying the keys Spark's reader
+  * sets up (requested schema, time zone, schema-conversion flags); per
+  * file, the footer's schema and rebase modes, the pushed filters
+  * compiled against that schema under the session's pushdown settings,
+  * and parquet-mr's `ParquetRecordReader` with Spark's
+  * `ParquetReadSupport`. Every filter of the matched stack is then
+  * evaluated on the file's rows joined to the partition values, and the
   * projection applied. `executeCollect`, `executeTake` and `executeTail`
   * start no Spark job; under another operator `doExecute` hands the same
   * rows on as a one-partition RDD. Nothing is read before execution, so
-  * a lookup DataFrame stays lazy. The relation and the directory stay on
-  * the driver (`@transient`, as in `FileSourceScanExec`): no task ever
-  * reads them. `numFiles`, `filesSize` and `numOutputRows` are posted as
-  * driver metrics.
+  * a lookup DataFrame stays lazy, and session settings are read at every
+  * execution. The relation and the directory stay on the driver
+  * (`@transient`, as in `FileSourceScanExec`): no task ever reads them.
+  * `numFiles`, `filesSize`, `rowsDecoded` (rows the parquet reader
+  * returned, before the stack's filters) and `numOutputRows` are posted
+  * as driver metrics.
   */
 private[hep] final case class HepLookupExec(
     projects: Seq[NamedExpression],
@@ -118,30 +135,96 @@ private[hep] final case class HepLookupExec(
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "numFiles" -> SQLMetrics.createMetric(sparkContext, "number of files read"),
     "filesSize" -> SQLMetrics.createSizeMetric(sparkContext, "size of files read"),
+    "rowsDecoded" -> SQLMetrics.createMetric(sparkContext, "number of rows decoded"),
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
+
+  /** The Hadoop conf of one read, set up as Spark's parquet reader sets
+    * up the conf it broadcasts to its tasks.
+    */
+  private def readConf(session: classic.SparkSession): JobConf = {
+    val sqlConf = session.sessionState.conf
+    val conf = new JobConf(session.sessionState.newHadoopConfWithOptions(relation.options))
+    val requested = DataTypeUtils.fromAttributes(dataColumns).json
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requested)
+    conf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, requested)
+    conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sqlConf.sessionLocalTimeZone)
+    conf.setBoolean(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key, sqlConf.nestedSchemaPruningEnabled)
+    conf.setBoolean(SQLConf.CASE_SENSITIVE.key, sqlConf.caseSensitiveAnalysis)
+    // ParquetToSparkSchemaConverter reads every one of these
+    conf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key, sqlConf.isParquetBinaryAsString)
+    conf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, sqlConf.isParquetINT96AsTimestamp)
+    conf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
+      sqlConf.parquetInferTimestampNTZEnabled)
+    conf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, sqlConf.legacyParquetNanosAsLong)
+    conf.setBoolean(SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION.key,
+      sqlConf.parquetReaderRespectUnknownTypeAnnotation)
+    conf
+  }
 
   private def read(): Array[InternalRow] = {
     val files = dir.toSeq.flatMap(_.files)
     val rows = ArrayBuffer.empty[InternalRow]
+    var decoded = 0L
     if (files.nonEmpty) {
       val input = dataColumns ++ partitionColumns
       val keep = Predicate.create(filters.reduceOption(And).getOrElse(Literal.TrueLiteral), input)
       val project = UnsafeProjection.create(projects, input)
-      val readFile = relation.fileFormat.buildReaderWithPartitionValues(
-        relation.sparkSession, relation.dataSchema, relation.partitionSchema,
-        DataTypeUtils.fromAttributes(dataColumns), pushedFilters,
-        relation.options + (FileFormat.OPTION_RETURNING_BATCH -> "false"),
-        relation.sparkSession.asInstanceOf[classic.SparkSession].sessionState
-          .newHadoopConfWithOptions(relation.options))
+      val session = relation.sparkSession.asInstanceOf[classic.SparkSession]
+      val sqlConf = session.sessionState.conf
+      val conf = readConf(session)
+      val options = new ParquetOptions(relation.options, sqlConf)
+      val joined = new JoinedRow
+      val values = dir.get.values
       for (f <- files) {
-        val it = readFile(PartitionedFile(dir.get.values, SparkPath.fromPath(f.getPath),
-          0, f.getLen, Array.empty, f.getModificationTime, f.getLen, f.metadata))
-        try it.foreach(r => if (keep.eval(r)) rows += project(r).copy())
-        finally it match { case c: Closeable => c.close(); case _ => }
+        val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f.fileStatus, conf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS).getFileMetaData
+        val keyValues = footer.getKeyValueMetaData
+        val datetimeRebase =
+          DataSourceUtils.datetimeRebaseSpec(keyValues.get, options.datetimeRebaseModeInRead)
+        val int96Rebase =
+          DataSourceUtils.int96RebaseSpec(keyValues.get, options.int96RebaseModeInRead)
+        val pushed =
+          if (!sqlConf.parquetFilterPushDown) None
+          else {
+            val compile = new ParquetFilters(footer.getSchema, sqlConf.parquetFilterPushDownDate,
+              sqlConf.parquetFilterPushDownTimestamp, sqlConf.parquetFilterPushDownDecimal,
+              sqlConf.parquetFilterPushDownStringPredicate,
+              sqlConf.parquetFilterPushDownInFilterThreshold, sqlConf.caseSensitiveAnalysis,
+              datetimeRebase)
+            pushedFilters.flatMap(compile.createFilter).reduceOption(FilterApi.and)
+          }
+        // row-group (and page-index) skipping reads the predicate off the conf
+        pushed match {
+          case Some(p) => ParquetInputFormat.setFilterPredicate(conf, p)
+          case None => conf.unset(ParquetInputFormat.FILTER_PREDICATE)
+        }
+        // INT96 values are converted only when a writer other than parquet-mr wrote them
+        val convertTz =
+          if (sqlConf.isParquetINT96TimestampConversion &&
+              !footer.getCreatedBy.startsWith("parquet-mr"))
+            Some(DateTimeUtils.getZoneId(sqlConf.sessionLocalTimeZone))
+          else None
+        val support = new ParquetReadSupport(convertTz, enableVectorizedReader = false,
+          datetimeRebase, int96Rebase)
+        val reader = pushed match {
+          case Some(p) if sqlConf.parquetRecordFilterEnabled =>
+            new ParquetRecordReader[InternalRow](support, FilterCompat.get(p, null))
+          case _ => new ParquetRecordReader[InternalRow](support)
+        }
+        val it = new RecordReaderIterator(reader)
+        try {
+          reader.initialize(new FileSplit(f.getPath, 0, f.getLen, Array.empty[String]),
+            new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+          it.foreach { r =>
+            decoded += 1
+            if (keep.eval(joined(r, values))) rows += project(joined).copy()
+          }
+        } finally it.close()
       }
     }
     metrics("numFiles").set(files.size.toLong)
     metrics("filesSize").set(files.map(_.getLen).sum)
+    metrics("rowsDecoded").add(decoded)
     metrics("numOutputRows").add(rows.size.toLong)
     SQLMetrics.postDriverMetricUpdates(sparkContext,
       sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), metrics.values.toSeq)

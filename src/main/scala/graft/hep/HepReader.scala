@@ -12,13 +12,16 @@ import Schemas._
   * per-column reads, `read/hdf.py:262-316`). A point lookup's process and
   * chunk predicates prune partitions to that chunk's directory (= the
   * reference's O(1) `divmod` B-tree descent, `read/hdf.py:454-466`), and
-  * the chunk is read on the calling thread, starting no Spark job: each
-  * member table is opened with the [[HepLookup]] marker option, so the
-  * planner reads any scan whose partition filters leave one directory of
-  * at most [[HepLookup.MaxDriverReadBytes]] on the driver, with the
-  * event_id predicate pushed to that parquet read (it skips row groups
-  * only when a chunk file holds several; a chunk written in one row group
-  * is decoded whole and filtered). A scan over several directories or a
+  * the chunk is read on the calling thread, starting no Spark job and
+  * broadcasting nothing: each member table is opened with the
+  * [[HepLookup]] marker option, so the planner reads any scan whose
+  * partition filters leave one directory of at most
+  * [[HepLookup.MaxDriverReadBytes]] on the driver, through a parquet row
+  * reader built per lookup from the session's settings, with the event_id
+  * predicate pushed to it (it skips row groups only when a chunk file
+  * holds several; a chunk written in one row group is decoded whole and
+  * filtered; the node's `rowsDecoded` metric counts the rows the reader
+  * returned before that filter). A scan over several directories or a
   * larger one (a process scan, an oversized custom dataset) plans the
   * ordinary parquet scan. The strategy is installed on the session when
   * the reader opens its first table.

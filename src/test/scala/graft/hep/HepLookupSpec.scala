@@ -1,6 +1,10 @@
 package graft.hep
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.scheduler.graftaccess.Jobs
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
@@ -183,5 +187,73 @@ class HepLookupSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(node.metrics("filesSize").value == files.head.length())
     assert(node.metrics("numOutputRows").value == rows.length.toLong)
     assert(rows.nonEmpty)
+    val chunkRows = spark.read.parquet(chunkDir.toString).count()
+    val decoded = node.metrics("rowsDecoded").value
+    assert(decoded >= rows.length && decoded <= chunkRows, s"decoded $decoded of $chunkRows")
+  }
+
+  test("a lookup through an opened reader creates no broadcast") {
+    val r = new HepReader(spark, store)
+    val warm = r.process(Procs.head).event(0) // opens the member tables
+    warm.particles.collect(); warm.edges.collect(); warm.custom("wgt").collect()
+    // broadcast ids are sequential: a probe's id less the last probe's, less one
+    def nextBroadcastId(): Long = {
+      val b = spark.sparkContext.broadcast(0)
+      try b.id finally b.destroy()
+    }
+    val b0 = nextBroadcastId()
+    val j0 = jobs()
+    for (p <- Procs; n <- Seq(1L, 6L, 11L)) {
+      val ev = r.process(p).event(n)
+      assert(ev.particles.collect().nonEmpty && ev.edges.collect().nonEmpty)
+      assert(ev.custom("hits").collect().nonEmpty)
+    }
+    assert(jobs() - j0 == 0, "lookups on an opened reader started a job")
+    val created = nextBroadcastId() - b0 - 1
+    assert(created == 0, s"18 lookups on an opened reader created $created broadcasts")
+  }
+
+  test("the driver read skips row groups by event_id, per the session's pushdown setting") {
+    // one process's particles rewritten with a row group per 4 rows: a
+    // chunk file holds several row groups, sorted by (event_id, idx)
+    val d = root.resolve("rowgroups").toString
+    val p = Procs.head
+    spark.read.parquet(s"$store/$ParticlesTable").where(col("process") === p)
+      .repartition(1).sortWithinPartitions("process", "chunk", "event_id", "idx")
+      .write.option("parquet.block.row.count.limit", "4")
+      .partitionBy("process", "chunk").parquet(s"$d/$ParticlesTable")
+    spark.read.parquet(s"$store/processes").write.parquet(s"$d/processes")
+    Files.copy(Paths.get(s"$store/_meta.json"), Paths.get(s"$d/_meta.json"))
+
+    val n = 7L // chunk 1 holds events 5 to 9
+    val chunkDir = s"$d/$ParticlesTable/process=$p/chunk=${n / PerChunk}"
+    val chunkFile = new java.io.File(chunkDir).listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(chunkFile.length == 1)
+    val footer = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(chunkFile.head.toURI), new Configuration()))
+    val rowGroups = try footer.getRowGroups.size finally footer.close()
+    assert(rowGroups > 2, s"$rowGroups row groups")
+    val chunkRows = spark.read.parquet(chunkDir).count()
+    val want = sorted(plain(ParticlesTable, p, n).collect())
+
+    val r = new HepReader(spark, d)
+    def lookup(): (Seq[String], Long) = {
+      val df = r.process(p).event(n).particles
+      val rows = df.collect()
+      (sorted(rows), lookups(df.queryExecution.executedPlan).head.metrics("rowsDecoded").value)
+    }
+    val (pushedRows, pushedDecoded) = lookup()
+    assert(pushedRows == want)
+    assert(pushedDecoded < chunkRows, s"decoded $pushedDecoded of $chunkRows rows")
+
+    val key = "spark.sql.parquet.filterPushdown"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    val (fullRows, fullDecoded) =
+      try lookup() finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(fullRows == want)
+    assert(fullDecoded == chunkRows)
+    assert(spark.conf.getOption(key) == before)
+    assert(lookup() == ((want, pushedDecoded)))
   }
 }
