@@ -6,9 +6,8 @@ import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
-import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{ParquetInputFormat, ParquetRecordReader}
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -19,8 +18,8 @@ import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.{DateTimeUtils, truncatedString}
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.{LeafExecNode, SQLExecution, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.execution.datasources.{DataSourceUtils, HadoopFsRelation, LogicalRelation, PartitionDirectory, RecordReaderIterator}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFilters, ParquetFooterReader, ParquetOptions, ParquetReadSupport, ParquetWriteSupport}
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, HadoopFsRelation, LogicalRelation, PartitionDirectory, PartitionedFile, RecordReaderIterator}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFilters, ParquetFooterReader, ParquetOptions, ParquetReadSupport, ParquetWriteSupport, VectorizedParquetRecordReader}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.graftaccess.SourceFilters
 import org.apache.spark.sql.internal.SQLConf
@@ -97,23 +96,24 @@ private[hep] object HepLookup extends SparkStrategy {
 
 /** Reads one partition directory of a hep member table on the driver.
   *
-  * Each file goes through the row reader that Spark's
-  * `ParquetFileFormat` builds for a task, built here on the calling
-  * thread with nothing broadcast: a Hadoop conf made per read from the
-  * session and the relation's options, carrying the keys Spark's reader
-  * sets up (requested schema, time zone, schema-conversion flags); per
-  * file, the footer's schema and rebase modes, the pushed filters
-  * compiled against that schema under the session's pushdown settings,
-  * and parquet-mr's `ParquetRecordReader` with Spark's
-  * `ParquetReadSupport`. Every filter of the matched stack is then
-  * evaluated on the file's rows joined to the partition values, and the
-  * projection applied. `executeCollect`, `executeTake` and `executeTail`
-  * start no Spark job; under another operator `doExecute` hands the same
-  * rows on as a one-partition RDD. Nothing is read before execution, so
-  * a lookup DataFrame stays lazy, and session settings are read at every
-  * execution. The relation and the directory stay on the driver
-  * (`@transient`, as in `FileSourceScanExec`): no task ever reads them.
-  * `numFiles`, `filesSize`, `rowsDecoded` (rows the parquet reader
+  * Each file goes through the reader Spark's `ParquetFileFormat` builds
+  * for a task, built here on the calling thread with nothing broadcast: a
+  * Hadoop conf made per read from the session and the relation's
+  * options, carrying the keys Spark's reader sets up (requested schema,
+  * time zone, schema-conversion flags); per file, the footer's schema and
+  * rebase modes, the pushed filters compiled against that schema under
+  * the session's pushdown settings, and the decoder Spark picks: its
+  * `VectorizedParquetRecordReader` read row by row, with the partition
+  * values appended, wherever `supportBatch` covers the columns, otherwise
+  * parquet-mr's `ParquetRecordReader` with Spark's `ParquetReadSupport`.
+  * Every filter of the matched stack is then evaluated on each row and
+  * the projection applied. `executeCollect`, `executeTake` and
+  * `executeTail` start no Spark job; under another operator `doExecute`
+  * hands the same rows on as a one-partition RDD. Nothing is read before
+  * execution, so a lookup DataFrame stays lazy, and session settings are
+  * read at every execution. The relation and the directory stay on the
+  * driver (`@transient`, as in `FileSourceScanExec`): no task ever reads
+  * them. `numFiles`, `filesSize`, `rowsDecoded` (rows the parquet reader
   * returned, before the stack's filters) and `numOutputRows` are posted
   * as driver metrics.
   */
@@ -145,6 +145,7 @@ private[hep] final case class HepLookupExec(
     val sqlConf = session.sessionState.conf
     val conf = new JobConf(session.sessionState.newHadoopConfWithOptions(relation.options))
     val requested = DataTypeUtils.fromAttributes(dataColumns).json
+    conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
     conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requested)
     conf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, requested)
     conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sqlConf.sessionLocalTimeZone)
@@ -173,53 +174,80 @@ private[hep] final case class HepLookupExec(
       val sqlConf = session.sessionState.conf
       val conf = readConf(session)
       val options = new ParquetOptions(relation.options, sqlConf)
-      val joined = new JoinedRow
+      // the decoder Spark's scan picks: the vectorized one wherever it covers the columns
+      val vectorized = relation.fileFormat.supportBatch(session, DataTypeUtils.fromAttributes(input))
       val values = dir.get.values
+      val joined = new JoinedRow
       for (f <- files) {
-        val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f.fileStatus, conf),
-          ParquetMetadataConverter.SKIP_ROW_GROUPS).getFileMetaData
-        val keyValues = footer.getKeyValueMetaData
-        val datetimeRebase =
-          DataSourceUtils.datetimeRebaseSpec(keyValues.get, options.datetimeRebaseModeInRead)
-        val int96Rebase =
-          DataSourceUtils.int96RebaseSpec(keyValues.get, options.int96RebaseModeInRead)
-        val pushed =
-          if (!sqlConf.parquetFilterPushDown) None
-          else {
-            val compile = new ParquetFilters(footer.getSchema, sqlConf.parquetFilterPushDownDate,
-              sqlConf.parquetFilterPushDownTimestamp, sqlConf.parquetFilterPushDownDecimal,
-              sqlConf.parquetFilterPushDownStringPredicate,
-              sqlConf.parquetFilterPushDownInFilterThreshold, sqlConf.caseSensitiveAnalysis,
-              datetimeRebase)
-            pushedFilters.flatMap(compile.createFilter).reduceOption(FilterApi.and)
-          }
-        // row-group (and page-index) skipping reads the predicate off the conf
-        pushed match {
-          case Some(p) => ParquetInputFormat.setFilterPredicate(conf, p)
-          case None => conf.unset(ParquetInputFormat.FILTER_PREDICATE)
-        }
-        // INT96 values are converted only when a writer other than parquet-mr wrote them
-        val convertTz =
-          if (sqlConf.isParquetINT96TimestampConversion &&
-              !footer.getCreatedBy.startsWith("parquet-mr"))
-            Some(DateTimeUtils.getZoneId(sqlConf.sessionLocalTimeZone))
-          else None
-        val support = new ParquetReadSupport(convertTz, enableVectorizedReader = false,
-          datetimeRebase, int96Rebase)
-        val reader = pushed match {
-          case Some(p) if sqlConf.parquetRecordFilterEnabled =>
-            new ParquetRecordReader[InternalRow](support, FilterCompat.get(p, null))
-          case _ => new ParquetRecordReader[InternalRow](support)
-        }
-        val it = new RecordReaderIterator(reader)
+        // the vectorized reader reads on from the stream and row groups its footer read
+        val opened = ParquetFooterReader.openFileAndReadFooter(conf,
+          PartitionedFile(values, SparkPath.fromFileStatus(f.fileStatus), 0, f.getLen), vectorized)
+        var streamHeld = false // once initialized, the vectorized reader closes the stream
+        var it: RecordReaderIterator[_] = null
         try {
-          reader.initialize(new FileSplit(f.getPath, 0, f.getLen, Array.empty[String]),
-            new TaskAttemptContextImpl(conf, new TaskAttemptID()))
-          it.foreach { r =>
-            decoded += 1
-            if (keep.eval(joined(r, values))) rows += project(joined).copy()
+          val footer = opened.footer.getFileMetaData
+          val keyValues = footer.getKeyValueMetaData
+          val datetimeRebase =
+            DataSourceUtils.datetimeRebaseSpec(keyValues.get, options.datetimeRebaseModeInRead)
+          val int96Rebase =
+            DataSourceUtils.int96RebaseSpec(keyValues.get, options.int96RebaseModeInRead)
+          val pushed =
+            if (!sqlConf.parquetFilterPushDown) None
+            else {
+              val compile = new ParquetFilters(footer.getSchema, sqlConf.parquetFilterPushDownDate,
+                sqlConf.parquetFilterPushDownTimestamp, sqlConf.parquetFilterPushDownDecimal,
+                sqlConf.parquetFilterPushDownStringPredicate,
+                sqlConf.parquetFilterPushDownInFilterThreshold, sqlConf.caseSensitiveAnalysis,
+                datetimeRebase)
+              pushedFilters.flatMap(compile.createFilter).reduceOption(FilterApi.and)
+            }
+          // row-group (and page-index) skipping reads the predicate off the conf
+          pushed match {
+            case Some(p) => ParquetInputFormat.setFilterPredicate(conf, p)
+            case None => conf.unset(ParquetInputFormat.FILTER_PREDICATE)
           }
-        } finally it.close()
+          // INT96 values are converted only when a writer other than parquet-mr wrote them
+          val convertTz =
+            if (sqlConf.isParquetINT96TimestampConversion &&
+                !footer.getCreatedBy.startsWith("parquet-mr"))
+              Some(DateTimeUtils.getZoneId(sqlConf.sessionLocalTimeZone))
+            else None
+          val split = new FileSplit(f.getPath, 0, f.getLen, Array.empty[String])
+          val context = new TaskAttemptContextImpl(conf, new TaskAttemptID())
+          // each row holds the requested data columns, then the partition values
+          val fileRows: Iterator[InternalRow] = if (vectorized) {
+            // on-heap vectors: off a task, Spark's reader allocates them on-heap too
+            val reader = new VectorizedParquetRecordReader(convertTz.orNull,
+              datetimeRebase.mode.toString, datetimeRebase.timeZone,
+              int96Rebase.mode.toString, int96Rebase.timeZone, false,
+              sqlConf.parquetVectorizedReaderBatchSize)
+            it = new RecordReaderIterator(reader)
+            reader.initialize(split, context, Some(opened.inputFile), Some(opened.inputStream),
+              Some(opened.footer))
+            streamHeld = true
+            reader.initBatch(relation.partitionSchema, values)
+            it.asInstanceOf[Iterator[InternalRow]]
+          } else {
+            val support = new ParquetReadSupport(convertTz, enableVectorizedReader = false,
+              datetimeRebase, int96Rebase)
+            val reader = pushed match {
+              case Some(p) if sqlConf.parquetRecordFilterEnabled =>
+                new ParquetRecordReader[InternalRow](support, FilterCompat.get(p, null))
+              case _ => new ParquetRecordReader[InternalRow](support)
+            }
+            val rowIt = new RecordReaderIterator(reader)
+            it = rowIt
+            reader.initialize(split, context)
+            rowIt.map(joined(_, values))
+          }
+          fileRows.foreach { r =>
+            decoded += 1
+            if (keep.eval(r)) rows += project(r).copy()
+          }
+        } finally {
+          if (it != null) it.close()
+          if (!streamHeld) opened.inputStreamOpt.ifPresent(_.close())
+        }
       }
     }
     metrics("numFiles").set(files.size.toLong)

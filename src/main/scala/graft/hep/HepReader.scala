@@ -16,12 +16,13 @@ import Schemas._
   * broadcasting nothing: each member table is opened with the
   * [[HepLookup]] marker option, so the planner reads any scan whose
   * partition filters leave one directory of at most
-  * [[HepLookup.MaxDriverReadBytes]] on the driver, through a parquet row
-  * reader built per lookup from the session's settings, with the event_id
-  * predicate pushed to it (it skips row groups only when a chunk file
-  * holds several; a chunk written in one row group is decoded whole and
-  * filtered; the node's `rowsDecoded` metric counts the rows the reader
-  * returned before that filter). A scan over several directories or a
+  * [[HepLookup.MaxDriverReadBytes]] on the driver, through the parquet
+  * reader Spark's scan would pick (vectorized for the store's columns),
+  * built per lookup from the session's settings, with the event_id
+  * predicate pushed to it (it skips row groups when a chunk file holds
+  * several, and pages through the column index; the node's
+  * `rowsDecoded` metric counts the rows the reader returned before the
+  * lookup's filters). A scan over several directories or a
   * larger one (a process scan, an oversized custom dataset) plans the
   * ordinary parquet scan. The strategy is installed on the session when
   * the reader opens its first table.

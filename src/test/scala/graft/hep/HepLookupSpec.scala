@@ -78,11 +78,19 @@ class HepLookupSpec extends AnyFunSuite with BeforeAndAfterAll
     val r = new HepReader(spark, store)
     val warm = r.process(Procs.head).event(0) // opens the member tables
     warm.particles.collect(); warm.edges.collect(); warm.custom("wgt").collect(); warm.count
+    // broadcast ids are sequential: a probe's id less the last probe's, less one
+    def nextBroadcastId(): Long = {
+      val b = spark.sparkContext.broadcast(0)
+      try b.id finally b.destroy()
+    }
     var lookupJobs = 0
+    var lookupBroadcasts = 0L
     def counted[T](body: => T): T = {
       val j0 = jobs()
+      val b0 = nextBroadcastId()
       val out = body
       lookupJobs += jobs() - j0
+      lookupBroadcasts += nextBroadcastId() - b0 - 1
       out
     }
     def sel(cols: String*): DataFrame => DataFrame = _.select(cols.map(col): _*)
@@ -116,6 +124,8 @@ class HepLookupSpec extends AnyFunSuite with BeforeAndAfterAll
       assert(ev.customMeta("note") == s"$p-$n")
     }
     assert(lookupJobs == 0, s"lookups on an opened reader started $lookupJobs jobs")
+    assert(lookupBroadcasts == 0,
+      s"lookups on an opened reader created $lookupBroadcasts broadcasts")
 
     // past num_evts: no chunk directory, no rows, no job
     val past = r.process(Procs.head).event(NumEvts + PerChunk.toLong)
@@ -192,27 +202,6 @@ class HepLookupSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(decoded >= rows.length && decoded <= chunkRows, s"decoded $decoded of $chunkRows")
   }
 
-  test("a lookup through an opened reader creates no broadcast") {
-    val r = new HepReader(spark, store)
-    val warm = r.process(Procs.head).event(0) // opens the member tables
-    warm.particles.collect(); warm.edges.collect(); warm.custom("wgt").collect()
-    // broadcast ids are sequential: a probe's id less the last probe's, less one
-    def nextBroadcastId(): Long = {
-      val b = spark.sparkContext.broadcast(0)
-      try b.id finally b.destroy()
-    }
-    val b0 = nextBroadcastId()
-    val j0 = jobs()
-    for (p <- Procs; n <- Seq(1L, 6L, 11L)) {
-      val ev = r.process(p).event(n)
-      assert(ev.particles.collect().nonEmpty && ev.edges.collect().nonEmpty)
-      assert(ev.custom("hits").collect().nonEmpty)
-    }
-    assert(jobs() - j0 == 0, "lookups on an opened reader started a job")
-    val created = nextBroadcastId() - b0 - 1
-    assert(created == 0, s"18 lookups on an opened reader created $created broadcasts")
-  }
-
   test("the driver read skips row groups by event_id, per the session's pushdown setting") {
     // one process's particles rewritten with a row group per 4 rows: a
     // chunk file holds several row groups, sorted by (event_id, idx)
@@ -246,14 +235,21 @@ class HepLookupSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(pushedRows == want)
     assert(pushedDecoded < chunkRows, s"decoded $pushedDecoded of $chunkRows rows")
 
+    // a session setting for the body only, restored afterwards
+    def withConf[T](key: String, value: String)(body: => T): T = {
+      val before = spark.conf.getOption(key)
+      spark.conf.set(key, value)
+      try body finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
     val key = "spark.sql.parquet.filterPushdown"
     val before = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    val (fullRows, fullDecoded) =
-      try lookup() finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val (fullRows, fullDecoded) = withConf(key, "false")(lookup())
     assert(fullRows == want)
     assert(fullDecoded == chunkRows)
     assert(spark.conf.getOption(key) == before)
     assert(lookup() == ((want, pushedDecoded)))
+    // with vectorized reading off, the row reader skips the same row groups
+    assert(withConf("spark.sql.parquet.enableVectorizedReader", "false")(lookup()) ==
+      ((want, pushedDecoded)))
   }
 }
