@@ -2,11 +2,14 @@ package graft.hep
 
 import java.io.IOException
 import java.nio.charset.StandardCharsets
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
 import java.util.UUID
 import scala.util.Try
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 
 /** Store-metadata I/O through Hadoop's `FileSystem` API.
@@ -23,6 +26,23 @@ private[graft] object HadoopIo {
 
   def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** The session's Hadoop conf with `options`, for writing a store: its
+    * `file:` scheme is [[NioLocalFileSystem]]. Hadoop caches one `file:`
+    * filesystem per JVM, of the class of whichever conf asked first, so
+    * this conf also bypasses that cache: each `getFileSystem` on it
+    * builds its own instance (a few objects, no I/O).
+    */
+  def writeConf(spark: SparkSession, options: Map[String, String] = Map.empty): Configuration = {
+    val conf = spark.sessionState.newHadoopConfWithOptions(options)
+    conf.setClass("fs.file.impl", classOf[NioLocalFileSystem], classOf[FileSystem])
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    conf
+  }
+
+  /** Filesystem for writing a store (see [[writeConf]]). */
+  def writeFs(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(writeConf(spark))
 
   /** Filesystem for callers without a session in hand (DSv2 catalog
     * hooks): the active session's conf when present, defaults otherwise.
@@ -65,7 +85,7 @@ private[graft] object HadoopIo {
     */
   def writeString(spark: SparkSession, path: String, content: String): Unit = {
     val dst = new Path(path)
-    val f = fs(spark, path)
+    val f = writeFs(spark, path)
     val tmp = new Path(dst.getParent, s".${dst.getName}.${UUID.randomUUID()}.tmp")
     try {
       val out = f.create(tmp, false)
@@ -86,4 +106,26 @@ private[graft] object HadoopIo {
     val f = fs(spark, path)
     if (f.exists(p)) f.delete(p, true)
   }
+}
+
+/** Hadoop's checksummed local filesystem over [[NioRawLocalFileSystem]]:
+  * create, rename and checksum behaviour are `LocalFileSystem`'s own.
+  */
+final class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
+
+/** Hadoop's raw local filesystem, except that it sets permissions through
+  * `java.nio` instead of a forked `chmod`: without libhadoop,
+  * `RawLocalFileSystem.setPermission` forks one for every directory and
+  * file it creates (data and `.crc` alike), about 3 ms each. It sets the
+  * same mode bits. A sticky bit, which NIO cannot set, and a store
+  * without POSIX attributes take Hadoop's own path.
+  */
+final class NioRawLocalFileSystem extends RawLocalFileSystem {
+  override def setPermission(p: Path, permission: FsPermission): Unit =
+    if (permission.getStickyBit) super.setPermission(p, permission)
+    else
+      // without a sticky bit, the symbolic form is the 9 `rwx` flags NIO takes
+      try Files.setPosixFilePermissions(pathToFile(p).toPath,
+        PosixFilePermissions.fromString(permission.toString))
+      catch { case _: UnsupportedOperationException => super.setPermission(p, permission) }
 }

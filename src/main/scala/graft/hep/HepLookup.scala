@@ -19,7 +19,7 @@ import org.apache.spark.sql.catalyst.util.{DateTimeUtils, truncatedString}
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.{LeafExecNode, SQLExecution, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.datasources.{DataSourceUtils, HadoopFsRelation, LogicalRelation, PartitionDirectory, PartitionedFile, RecordReaderIterator}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFilters, ParquetFooterReader, ParquetOptions, ParquetReadSupport, ParquetWriteSupport, VectorizedParquetRecordReader}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFilters, ParquetFooterReader, ParquetOptions, ParquetReadSupport, ParquetWriteSupport, VectorizedParquetRecordReader}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.graftaccess.SourceFilters
 import org.apache.spark.sql.internal.SQLConf
@@ -31,19 +31,17 @@ import org.apache.spark.sql.sources.Filter
   * `spark.experimental.extraStrategies`.
   *
   * It matches a project/filter stack over a parquet `HadoopFsRelation`
-  * whose options carry [[Marker]] — set only by [[HepReader]]'s member
-  * tables, so SQL over [[graft.sources.HepCatalog]] and every other
-  * parquet read plan as before. It lists the relation's already-open file
-  * index with the stack's partition filters (an in-memory prune, no I/O)
-  * and plans a [[HepLookupExec]] when at most one partition directory —
+  * whose file index is a [[HepChunkIndex]] — the index of
+  * [[HepReader]]'s member tables only, so SQL over
+  * [[graft.sources.HepCatalog]] and every other parquet read plan as
+  * before. It lists that index with the stack's partition filters (a
+  * point lookup's one chunk directory, listed once per reader) and plans
+  * a [[HepLookupExec]] when at most one partition directory —
   * one `(process, chunk)` — is left and its files total at most
   * [[MaxDriverReadBytes]]. Any other scan returns `Nil`, and the ordinary
   * `FileSourceScanExec` plans it.
   */
 private[hep] object HepLookup extends SparkStrategy {
-
-  /** The relation option that marks a [[HepReader]] member table. */
-  val Marker = "graft.hep.lookup"
 
   /** Largest partition directory read on the driver: a reference-default
     * chunk of 1000 events is about 2 MB of particles.
@@ -65,8 +63,7 @@ private[hep] object HepLookup extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case PhysicalOperation(projects, filters,
           l @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _))
-        if fs.options.contains(Marker) && fs.fileFormat.isInstanceOf[ParquetFileFormat] &&
-          (projects ++ filters).forall(plannable) =>
+        if fs.location.isInstanceOf[HepChunkIndex] && (projects ++ filters).forall(plannable) =>
       val resolver = SQLConf.get.resolver
       val partitionColumns = l.resolve(fs.partitionSchema, resolver)
       val partitionSet = AttributeSet(partitionColumns)

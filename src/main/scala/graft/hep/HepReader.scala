@@ -13,8 +13,9 @@ import Schemas._
   * chunk predicates prune partitions to that chunk's directory (= the
   * reference's O(1) `divmod` B-tree descent, `read/hdf.py:454-466`), and
   * the chunk is read on the calling thread, starting no Spark job and
-  * broadcasting nothing: each member table is opened with the
-  * [[HepLookup]] marker option, so the planner reads any scan whose
+  * broadcasting nothing: each member table is a parquet relation over a
+  * [[HepChunkIndex]], which lists only the directory such predicates
+  * name, and [[HepLookup]] reads any scan over that index whose
   * partition filters leave one directory of at most
   * [[HepLookup.MaxDriverReadBytes]] on the driver, through the parquet
   * reader Spark's scan would pick (vectorized for the store's columns),
@@ -39,14 +40,20 @@ import Schemas._
   *
   * A reader is a snapshot of its store, like the reference's open
   * `h5py.File`: the sidecar is read once, at construction (the
-  * reference's per-open attr cache, `read/hdf.py:437`); each member
-  * table's schema and file listing are resolved once, at its first use;
-  * the `processes` metadata is collected once, after which [[process]] is
-  * a map lookup that starts no job and [[processes]] is a local Dataset
-  * of the same rows. A lookup therefore pays only its own chunk read.
-  * Files written or rewritten after a table's first use (a store rebuilt
-  * in place, [[HepMaintenance.compact]]) are not seen: open a new reader.
-  * A table whose open fails is not remembered, so the next access retries
+  * reference's per-open attr cache, `read/hdf.py:437`). Each member
+  * table is opened once, at its first use, with no Spark job and no
+  * listing of the table: its schema comes from one footer on the driver
+  * (the first file of the looked-up chunk when a point lookup opens it),
+  * and its size estimate for join planning from the sidecar's
+  * `table_bytes`. Each chunk directory is a snapshot from its first
+  * listing; a scan over other filters lists the whole table once. The
+  * `processes` metadata is collected once, after which [[process]] is a
+  * map lookup that starts no job and [[processes]] is a local Dataset of
+  * the same rows. So opening a reader and its first lookup cost the same
+  * at any store size, and a lookup pays only its own chunk read. Files
+  * written or rewritten after a directory was listed (a store rebuilt in
+  * place, [[HepMaintenance.compact]]) are not seen: open a new reader. A
+  * table whose open fails is not remembered, so the next access retries
   * it; one reader may serve lookups from several threads.
   *
   * Iteration contract: [[ProcessReader.events]] is UNORDERED by default,
@@ -57,12 +64,18 @@ final class HepReader(spark: SparkSession, path: String) {
 
   private val opened = mutable.Map.empty[String, DataFrame]
 
-  private def table(name: String): DataFrame = synchronized {
-    opened.getOrElseUpdate(name, {
-      HepLookup.install(spark)
-      spark.read.option(HepLookup.Marker, "true").parquet(s"$path/$name")
-    })
-  }
+  /** Member table `name`; `chunk` names the `(process, chunk)` directory
+    * of the lookup that opens it, whose first file gives the schema.
+    */
+  private[hep] def table(name: String, chunk: Option[(String, Long)] = None): DataFrame =
+    synchronized {
+      opened.getOrElseUpdate(name, {
+        HepLookup.install(spark)
+        spark.baseRelationToDataFrame(HepChunkIndex.relation(spark, s"$path/$name",
+          partitioned = name != ProcessesTable, tableBytes.get(name),
+          chunk.collect { case (p, c) if c.isValidInt => (p, c.toInt) }))
+      })
+    }
 
   /** The `processes` table, collected once. Stores written before the
     * decay surface existed lack `in_pcls`/`out_pcls`; they are patched in
@@ -89,20 +102,29 @@ final class HepReader(spark: SparkSession, path: String) {
     new ProcessReader(metas(key))
   }
 
-  /** File-level `evts_per_chunk` attr from the `_meta.json` sidecar, read
-    * through the Hadoop `FileSystem` of the store's path (works on any
-    * scheme — a `java.io.File` read would silently miss the sidecar on
-    * HDFS/S3 and refuse every store).
+  private def unfinalized(what: String) = new IllegalArgumentException(
+    s"$path/_meta.json $what: the hep store at $path was never " +
+      "finalized (its writer failed or did not close), so it may lack rows")
+
+  /** The `_meta.json` sidecar, read through the Hadoop `FileSystem` of the
+    * store's path (works on any scheme — a `java.io.File` read would
+    * silently miss the sidecar on HDFS/S3 and refuse every store).
     */
-  val evtsPerChunk: Int = {
-    def unfinalized(what: String) = new IllegalArgumentException(
-      s"$path/_meta.json $what: the hep store at $path was never " +
-        "finalized (its writer failed or did not close), so it may lack rows")
-    val sidecar = HadoopIo.readString(spark, s"$path/_meta.json")
-      .getOrElse(throw unfinalized("is missing"))
+  private val sidecar: String = HadoopIo.readString(spark, s"$path/_meta.json")
+    .getOrElse(throw unfinalized("is missing"))
+
+  /** File-level `evts_per_chunk` attr from the sidecar. */
+  val evtsPerChunk: Int =
     "\"evts_per_chunk\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(sidecar)
       .map(_.group(1).toInt).getOrElse(throw unfinalized("has no evts_per_chunk"))
-  }
+
+  /** Bytes per member table, from the sidecar's `table_bytes` object; a
+    * producer that did not record it leaves the map empty.
+    */
+  private val tableBytes: Map[String, Long] =
+    "\"table_bytes\"\\s*:\\s*\\{([^}]*)\\}".r.findFirstMatchIn(sidecar).toSeq
+      .flatMap(m => "\"(\\w+)\"\\s*:\\s*(\\d+)".r.findAllMatchIn(m.group(1)))
+      .map(m => m.group(1) -> m.group(2).toLong).toMap
 
   final class ProcessReader private[HepReader] (val meta: ProcessMeta) {
     // eager metadata snapshot, like the reference's attr cache
@@ -137,6 +159,12 @@ final class HepReader(spark: SparkSession, path: String) {
     private def inProc(df: DataFrame): DataFrame =
       df.where(col("process") === meta.process)
 
+    /** Member table `name` of this process, opened from `chunk` if this
+      * opens it.
+      */
+    private[HepReader] def inChunk(name: String, chunk: Long): DataFrame =
+      inProc(table(name, Some(meta.process -> chunk)))
+
     /** All particle rows of this process (unordered scan). */
     def particles: DataFrame = inProc(table(ParticlesTable))
 
@@ -159,11 +187,11 @@ final class HepReader(spark: SparkSession, path: String) {
   final class EventReader private[HepReader] (
       proc: ProcessReader, val eventId: Long, chunk: Long) {
 
-    private def slice(df: DataFrame): DataFrame =
-      df.where(col("chunk") === chunk && col("event_id") === eventId)
+    private def slice(name: String): DataFrame = proc.inChunk(name, chunk)
+      .where(col("chunk") === chunk && col("event_id") === eventId)
 
     /** The event's particle table slice (all columns, pruned on use). */
-    def particles: DataFrame = slice(proc.particles)
+    def particles: DataFrame = slice(ParticlesTable)
 
     def pmu: DataFrame = particles.select(col("idx"), col("pmu"))
     def pdg: DataFrame = particles.select(col("idx"), col("pdg"))
@@ -182,11 +210,11 @@ final class HepReader(spark: SparkSession, path: String) {
     /** Final-state particles only — `pmu[masks['final']]` semantics. */
     def finalParticles: DataFrame = particles.where(col("fin"))
 
-    def edges: DataFrame = slice(proc.edges).select("src", "dst", "weight")
+    def edges: DataFrame = slice(EdgesTable).select("src", "dst", "weight")
 
     /** `num_pcls` from the events summary (attr, not a scan — P8). */
     def count: Long = {
-      val r = slice(proc.events).select("num_pcls").collect()
+      val r = slice(EventsTable).select("num_pcls").collect()
       if (r.isEmpty) 0L else r.head.getLong(0)
     }
 
@@ -199,7 +227,7 @@ final class HepReader(spark: SparkSession, path: String) {
       * typed columns existed surface them as empty arrays.
       */
     def custom(name: String): DataFrame = {
-      var df = slice(proc.custom).where(col("name") === name)
+      var df = slice(CustomTable).where(col("name") === name)
       if (!df.columns.contains("dtype"))
         df = df.withColumn("dtype", lit("f8"))
           .withColumn("values_long", typedLit(Seq.empty[Long]))
@@ -209,7 +237,7 @@ final class HepReader(spark: SparkSession, path: String) {
 
     /** Event custom metadata. */
     def customMeta: Map[String, String] = {
-      val r = slice(proc.events).select("custom_meta").collect()
+      val r = slice(EventsTable).select("custom_meta").collect()
       if (r.isEmpty) Map.empty
       else r.head.getMap[String, String](0).toMap
     }

@@ -45,8 +45,12 @@ import Schemas._
   * under a hidden (`.`-prefixed) temp name in its target directory,
   * which readers skip, and renamed to a fresh `part-<uuid>` name. A flush
   * first writes all of its files, then renames them, so a failed write
-  * leaves no visible file behind. The files of one flush are written one
-  * after another on the calling thread. The Spark write jobs this
+  * leaves no visible file behind. Directories and files are created
+  * through [[NioLocalFileSystem]] on `file:`: Hadoop's own local
+  * filesystem, without libhadoop, forks a `chmod` for every directory and
+  * every data and `.crc` file it creates, about 3 ms each, and that fork
+  * was the per-file cost of a small chunk. The files of one flush are
+  * written one after another on the calling thread. The Spark write jobs this
   * replaced ran a flush's tables concurrently, but each table cost a job;
   * measured on 4 vCPUs, the sequential driver write was faster both with
   * 16-event chunks of a few KB and with 1000-event chunks of a few MB
@@ -54,7 +58,8 @@ import Schemas._
   *
   * `close()` writes the `processes` table, then the `_meta.json` sidecar
   * LAST: the sidecar is the store's commit marker, and [[HepReader]]
-  * refuses a store without it. A failed flush or close poisons the
+  * refuses a store without it. It records each member table's bytes
+  * (`table_bytes`), the reader's size estimate for join planning. A failed flush or close poisons the
   * writer: the store may lack that chunk's rows, so from then on
   * `newProcess`, `newEvent`, `commitEvent` and `close` throw an
   * `IllegalStateException` whose cause is the original failure, and the
@@ -114,7 +119,7 @@ final class HepWriter(
   // truncates); here we refuse instead of truncating. Checked through the
   // path's Hadoop FileSystem so the guard holds on HDFS/S3, not just local
   // disk.
-  private val fs = HadoopIo.fs(spark, path)
+  private val fs = HadoopIo.writeFs(spark, path)
   require({
     val p = new Path(path)
     !fs.exists(p) ||
@@ -143,8 +148,7 @@ final class HepWriter(
       val f = encoder.schema(i)
       BoundReference(i, f.dataType, f.nullable)
     })
-    private val job =
-      Job.getInstance(spark.sessionState.newHadoopConfWithOptions(writeOpts))
+    private val job = Job.getInstance(HadoopIo.writeConf(spark, writeOpts))
     private val factory =
       new ParquetFileFormat().prepareWrite(spark, job, writeOpts, dataSchema)
     private val context =
@@ -168,7 +172,7 @@ final class HepWriter(
           Try(fs.delete(tmp, false))
           throw t
       }
-      Staged(tmp, new Path(dir, name))
+      Staged(table, tmp, new Path(dir, name), fs.getFileStatus(tmp).getLen)
     }
   }
 
@@ -177,6 +181,9 @@ final class HepWriter(
   private lazy val eventSink = new TableSink[EventMeta](EventsTable, partitioned = true)
   private lazy val customSink = new TableSink[CustomRow](CustomTable, partitioned = true)
   private lazy val processSink = new TableSink[ProcessMeta](ProcessesTable, partitioned = false)
+
+  /** Bytes of the visible files of each member table. */
+  private val tableBytes = mutable.LinkedHashMap.empty[String, Long]
 
   /** Writes every file, then makes them visible. If a write fails, the
     * files already written are deleted; a failed rename throws.
@@ -192,6 +199,7 @@ final class HepWriter(
     staged.foreach { s =>
       if (!fs.rename(s.tmp, s.dst))
         throw new IOException(s"commit failed: rename ${s.tmp} -> ${s.dst}")
+      tableBytes(s.table) = tableBytes.getOrElse(s.table, 0L) + s.bytes
     }
   }
 
@@ -417,8 +425,10 @@ final class HepWriter(
       if (metas.nonEmpty) commit(Seq(() => processSink.stage(metas)))
       // file-level attrs (layout/version/evts_per_chunk, write/hdf.py:571-576)
       val level = compressionLevel.map(l => s""","compression_level":$l""").getOrElse("")
+      // bytes per member table: the reader's size estimate for join planning
+      val bytes = tableBytes.map { case (t, n) => s""""$t":$n""" }.mkString(",")
       val sidecar =
-        s"""{"layout":"graft-hep","version":1,"evts_per_chunk":$evtsPerChunk,"compression":"$compression"$level}"""
+        s"""{"layout":"graft-hep","version":1,"evts_per_chunk":$evtsPerChunk,"compression":"$compression"$level,"table_bytes":{$bytes}}"""
       HadoopIo.writeString(spark, s"$path/_meta.json", sidecar)
     }
   }
@@ -434,6 +444,8 @@ object HepWriter {
       longs: Array[Long] = Array.empty,
       grid: Array[Array[Double]] = Array.empty)
 
-  /** A written file that is not visible yet: `tmp` is renamed to `dst`. */
-  private final case class Staged(tmp: Path, dst: Path)
+  /** A written file of `bytes` that is not visible yet: `tmp` is renamed
+    * to `dst`.
+    */
+  private final case class Staged(table: String, tmp: Path, dst: Path, bytes: Long)
 }

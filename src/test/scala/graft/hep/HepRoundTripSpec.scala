@@ -1,7 +1,10 @@
 package graft.hep
 
-import java.nio.file.Files
-import java.util.concurrent.{Callable, Executors, TimeUnit}
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.PosixFilePermissions
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, Executors, TimeUnit}
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.Path
 import org.apache.spark.scheduler.graftaccess.Jobs
 import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
@@ -35,6 +38,15 @@ class HepRoundTripSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def jobs(): Int = Jobs.submitted(spark.sparkContext)
+
+  /** `body`'s result, and the directories its readers listed and the
+    * footers they read, in order.
+    */
+  private def reads[T](body: => T): (T, Seq[Path]) = {
+    val seen = new ConcurrentLinkedQueue[Path]()
+    HepChunkIndex.onRead = seen.add(_)
+    try (body, seen.asScala.toSeq) finally HepChunkIndex.onRead = _ => ()
+  }
 
   /** A one-process store whose events carry only pdg and final mask. */
   private def writeBare(d: String, process: String, counts: Seq[Int]): Unit = {
@@ -299,10 +311,15 @@ class HepRoundTripSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(jobs() - j1 == 0, s"a point lookup started ${jobs() - j1} jobs")
     assert(fin.map(_.getAs[Int]("idx")).sorted.toSeq ==
       (0 until 4 + 13 % 3).filter(_ % 2 == 0))
-    // another reader on the same path opens its own tables
-    val j2 = jobs()
-    assert(new HepReader(spark, dir).process("higgs").length == 25)
-    assert(jobs() - j2 >= 1, "a new reader reused another reader's open state")
+    // another reader on the same path opens its own tables: it reads the
+    // sidecar, lists `processes` and reads its footer again
+    val sidecars = HadoopIo.readCount.get()
+    val (_, seen) = reads(assert(new HepReader(spark, dir).process("higgs").length == 25))
+    assert(HadoopIo.readCount.get() - sidecars == 1,
+      "a new reader reused another reader's sidecar")
+    assert(seen.size == 2 && seen.head.getName == ProcessesTable &&
+      seen(1).getParent.getName == ProcessesTable && seen(1).getName.endsWith(".parquet"),
+      s"a new reader reused another reader's listing or footer: $seen")
   }
 
   test("a reader is a snapshot: a rewritten store needs a new reader") {
@@ -670,8 +687,11 @@ class HepRoundTripSpec extends AnyFunSuite with BeforeAndAfterAll {
         |{"name":"values_long","type":{"type":"array","elementType":"long","containsNull":false},"nullable":true,"metadata":{}},
         |{"name":"values_2d","type":{"type":"array","elementType":{"type":"array","elementType":"double","containsNull":false},"containsNull":true},"nullable":true,"metadata":{}}]}""")
     def pinned(s: String): String = s.stripMargin.replace("\n", "")
+    val r = new HepReader(spark, d)
     for (t <- readSchemas.keys) {
       assert(spark.read.parquet(s"$d/$t").schema.json == pinned(readSchemas(t)), t)
+      // the reader's table, its schema read from one footer, resolves the same
+      assert(r.table(t).schema.json == pinned(readSchemas(t)), s"reader's $t")
       val files = Files.walk(java.nio.file.Paths.get(s"$d/$t"))
       try files.filter(f => f.toString.endsWith(".parquet") &&
           !f.getFileName.toString.startsWith(".")).forEach { f =>
@@ -686,5 +706,64 @@ class HepRoundTripSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       finally files.close()
     }
+  }
+
+  test("ingest forks no process and leaves the permissions chmod set") {
+    def ingest(d: String): Unit = {
+      val w = new HepWriter(spark, d, evtsPerChunk = 5)
+      for (proc <- Seq("a", "b")) {
+        val p = w.newProcess(proc)
+        for (e <- 0 until 10) {
+          val b = p.newEvent()
+          mkEvent(b, n = 3 + e % 2, seedBase = e.toLong)
+          p.commitEvent(b)
+        }
+      }
+      w.close()
+    }
+    // one-time class and filesystem set-up forks, whichever specs ran before
+    ingest(dir + "-forkwarm")
+    val d = dir + "-nofork" // 2 processes x 2 chunks
+    val recording = new jdk.jfr.Recording()
+    val dump = Files.createTempFile(Paths.get("target"), "ingest", ".jfr")
+    val forks = try {
+      recording.enable("jdk.ProcessStart")
+      recording.start()
+      try ingest(d) finally recording.stop()
+      recording.dump(dump)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.map(_.getString("command")).toSeq
+    } finally { recording.close(); Files.delete(dump) }
+    assert(forks.isEmpty, s"ingest forked ${forks.size} processes: ${forks.take(3)}")
+    // Hadoop's default umask, 022, on every directory and file (data, .crc, sidecar)
+    val entries = Files.walk(Paths.get(d))
+    val modes = try entries.iterator.asScala.map { f =>
+      (f, Files.isDirectory(f), PosixFilePermissions.toString(Files.getPosixFilePermissions(f)))
+    }.toSeq finally entries.close()
+    // the root, 5 tables, and 2 process and 4 chunk directories in each of 4
+    assert(modes.count(_._2) == 1 + 5 + 4 * (2 + 4), "directories")
+    for ((f, isDir, mode) <- modes)
+      assert(mode == (if (isDir) "rwxr-xr-x" else "rw-r--r--"), f)
+  }
+
+  test("a 2,048-chunk store: open and first lookup start no job and list one chunk") {
+    val d = dir + "-wide"
+    val w = new HepWriter(spark, d, evtsPerChunk = 1)
+    val p = w.newProcess("wide")
+    for (e <- 0 until 2048) {
+      val b = p.newEvent()
+      b.setPdg(Array(11, 13, e)).setMask("final", Array(true, false, true))
+      p.commitEvent(b)
+    }
+    w.close()
+    val j0 = jobs()
+    val (pdg, seen) = reads(new HepReader(spark, d).process("wide").event(1500).pdg.collect())
+    assert(jobs() - j0 == 0, s"open and first lookup started ${jobs() - j0} jobs")
+    assert(pdg.map(_.getInt(1)).sorted.toSeq == Seq(11, 13, 1500))
+    // `processes` and the looked-up chunk: one listing and one footer each
+    val chunkDir = s"$ParticlesTable/process=wide/chunk=1500"
+    val listed = seen.filterNot(_.getName.endsWith(".parquet"))
+    assert(seen.size == 4 && listed.size == 2 && listed.head.getName == ProcessesTable &&
+      listed(1).toString.endsWith(chunkDir) &&
+      seen.last.getParent.toString.endsWith(chunkDir), seen.mkString("\n"))
   }
 }
