@@ -43,12 +43,13 @@ object Kinematics {
   /** Energy component. */
   def energy(pmu: Column): Column = pmu("e")
 
-  /** Δφ wrapped into (-π, π]. */
+  /** Δφ wrapped into [-π, π): a difference of exactly π gives -π (ΔR,
+    * which squares it, is the same either way).
+    */
   def deltaPhi(a: Column, b: Column): Column = {
     val d = phi(a) - phi(b)
     val twoPi = lit(2.0 * math.Pi)
-    val w = d - twoPi * floor((d + lit(math.Pi)) / twoPi)
-    w
+    d - twoPi * floor((d + lit(math.Pi)) / twoPi)
   }
 
   /** ΔR = √(Δη² + Δφ²) — the standard cone distance. */

@@ -159,7 +159,11 @@ private[hep] object HepChunkIndex {
   private def hidden(name: String): Boolean =
     name.startsWith("_") || name.startsWith(".") || name.endsWith("._COPYING_")
 
-  private def chunkPath(process: String, chunk: Int): String =
+  /** The one chunk directory layout, relative to a member table's root:
+    * `process=<key>/chunk=<n>` with Spark's partition-path escaping.
+    * [[HepWriter]] writes there and the index lists there.
+    */
+  def chunkPath(process: String, chunk: Long): String =
     ExternalCatalogUtils.getPartitionPathString("process", process) + "/" +
       ExternalCatalogUtils.getPartitionPathString("chunk", chunk.toString)
 

@@ -34,7 +34,7 @@ import Schemas._
   * (`write/hdf.py:571-576`). A store without it was never finalized — a
   * writer that failed or never closed — and may lack rows, so the
   * constructor refuses it with an `IllegalArgumentException` instead of
-  * guessing its `evts_per_chunk`; so is a sidecar without
+  * guessing its `evts_per_chunk`; so is a sidecar without a positive
   * `evts_per_chunk`. Producers write the sidecar whole or not at all
   * (under a temp name, then renamed), so a torn sidecar is never seen.
   *
@@ -114,9 +114,13 @@ final class HepReader(spark: SparkSession, path: String) {
     .getOrElse(throw unfinalized("is missing"))
 
   /** File-level `evts_per_chunk` attr from the sidecar. */
-  val evtsPerChunk: Int =
-    "\"evts_per_chunk\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(sidecar)
+  val evtsPerChunk: Int = {
+    val n = "\"evts_per_chunk\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(sidecar)
       .map(_.group(1).toInt).getOrElse(throw unfinalized("has no evts_per_chunk"))
+    require(n >= 1, s"$path/_meta.json has evts_per_chunk = $n: a chunk " +
+      "holds at least one event, so no event of this store can be addressed")
+    n
+  }
 
   /** Bytes per member table, from the sidecar's `table_bytes` object; a
     * producer that did not record it leaves the map empty.

@@ -9,7 +9,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -40,8 +39,8 @@ import Schemas._
   * Spark's own parquet format (`ParquetFileFormat.prepareWrite`), which
   * supplies the codec and its level, the footer's Spark schema and the
   * file extension, so the files are those a Spark write job would leave;
-  * partition directories use Spark's escaping
-  * (`ExternalCatalogUtils.getPartitionPathString`). A file is written
+  * partition directories are laid out by `HepChunkIndex.chunkPath`,
+  * with Spark's escaping. A file is written
   * under a hidden (`.`-prefixed) temp name in its target directory,
   * which readers skip, and renamed to a fresh `part-<uuid>` name. A flush
   * first writes all of its files, then renames them, so a failed write
@@ -83,6 +82,9 @@ final class HepWriter(
     evtsPerChunk: Int = DefaultEvtsPerChunk,
     compression: String = "zstd",
     compressionLevel: Option[Int] = None) {
+
+  require(evtsPerChunk >= 1,
+    s"evtsPerChunk must be at least 1, got $evtsPerChunk")
 
   /** Codec-level writer options (reference S7 parity: `write/hdf.py:552-564`
     * exposes h5py's gzip level 1-9). Parquet's codec levels are reached
@@ -366,8 +368,7 @@ final class HepWriter(
             v.longs.toSeq, v.grid.map(_.toSeq).toSeq)
         })
 
-      val dir = ExternalCatalogUtils.getPartitionPathString("process", key) + "/" +
-        ExternalCatalogUtils.getPartitionPathString("chunk", chunk.toString)
+      val dir = HepChunkIndex.chunkPath(key, chunk)
       def write[T <: Product](sink: => TableSink[T], rows: Seq[T]): Seq[() => Staged] =
         if (rows.isEmpty) Nil else Seq(() => sink.stage(rows, dir))
       write(particleSink, particles) ++ write(edgeSink, edgeRows) ++

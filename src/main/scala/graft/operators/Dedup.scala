@@ -1182,17 +1182,7 @@ object Dedup {
     */
   def connectedComponents(
       pairs: DataFrame, localEdgeThreshold: Long = 2000000L,
-      maxIters: Int = 20): DataFrame =
-    connectedComponentsStats(pairs, localEdgeThreshold, maxIters)._1
-
-  /** Instrumented [[connectedComponents]]: also returns the round count
-    * (0 on the driver-local path) and which path ran ("local" /
-    * "distributed") — the observables `graft.BenchCC` records for the
-    * BASELINE.md local-vs-distributed cost table.
-    */
-  def connectedComponentsStats(
-      pairs: DataFrame, localEdgeThreshold: Long = 2000000L,
-      maxIters: Int = 20): (DataFrame, Int, String) = {
+      maxIters: Int = 20): DataFrame = {
     // normalize ids to LONG up front: callers may pass integer-typed ids,
     // and both the primitive-array collect below and the cross-path label
     // type (local vs distributed must agree) depend on a fixed width
@@ -1253,7 +1243,7 @@ object Dedup {
       // find() path-compresses (mutates the map) and iterating a live view
       // while mutating is undefined for mutable.HashMap
       val labels = parent.keys.toSeq.map(v => (v, find(v))).sorted
-      return (spark.createDataset(labels).toDF("doc_id", "cluster"), 0, "local")
+      return spark.createDataset(labels).toDF("doc_id", "cluster")
     }
     // lineage truncation per round (localCheckpoint, not just persist):
     // a persisted DataFrame keeps its full logical plan, so driver-side
@@ -1302,7 +1292,7 @@ object Dedup {
     require(converged,
       s"connectedComponents did not converge within $maxIters rounds " +
         "(graph diameter too large?); raise maxIters")
-    (labels, iter, "distributed")
+    labels
   }
 
   /** Duplicate CLUSTERS: connected components over the Jaccard-confirmed

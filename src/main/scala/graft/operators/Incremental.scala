@@ -368,9 +368,8 @@ object Incremental {
       try { Dedup.bandIndexCovered(s, root.toString); true }
       catch { case _: org.apache.spark.sql.AnalysisException => false }
     if (!present) {
-      // reclaim staging stranded by builders that DIED mid-write (same
-      // age-gated discipline as AvroStore's .inprogress-* sweep: younger
-      // siblings may be a concurrent builder still staging)
+      // reclaim staging stranded by builders that DIED mid-write, age-gated:
+      // younger siblings may be a concurrent builder still staging
       val now = System.currentTimeMillis()
       Option(root.getParentFile.listFiles()).getOrElse(Array.empty)
         .filter(d => (d.getName.startsWith(s"${root.getName}.build-") ||

@@ -655,8 +655,8 @@ object Similarity {
     *     vectors against that list's probes, and per-partition state is
     *     bounded by the largest list + its probes rather than the whole
     *     probe set. A corpus probed repeatedly this way should persist
-    *     `model.assignments` bucketed by `cid` (BucketedStoreSpec's
-    *     layout), which removes even that shuffle.
+    *     `model.assignments` bucketed by `cid`, which removes even that
+    *     shuffle.
     *
     * Both shapes are plan-asserted in IvfSpec and return identical rows.
     */

@@ -96,6 +96,24 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(p.contains("__salt"), p)
   }
 
+  test("salted join equals the plain join") {
+    import org.apache.spark.sql.functions.col
+    val li = Tables.lineitem(spark, sf)
+      .select(col("l_orderkey").as("k"), col("l_quantity"))
+    val o = Tables.orders(spark, sf)
+      .select(col("o_orderkey").as("k"), col("o_totalprice"))
+    val plain = li.join(o.withColumnRenamed("k", "k2"), col("k") === col("k2"))
+    val salted = operators.Skew.saltedJoin(li, o, "k", buckets = 4)
+    assert(salted.count() == plain.count())
+    // spot-check one key's payload multiset
+    val key = 1000L
+    val a = salted.filter(col("k") === key)
+      .select("o_totalprice").collect().map(_.getDouble(0)).sorted.toSeq
+    val b = plain.filter(col("k") === key)
+      .select("o_totalprice").collect().map(_.getDouble(0)).sorted.toSeq
+    assert(a == b)
+  }
+
   test("q37 unpivot plans as Expand (zero shuffle for the melt itself)") {
     val p = plan("q37_unpivot")
     assert(p.contains("Expand"), p)

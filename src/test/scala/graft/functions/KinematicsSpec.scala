@@ -58,6 +58,43 @@ class KinematicsSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(d === (6.0 - 2 * math.Pi) +- 1e-9)
   }
 
+  test("deltaPhi of exactly pi is -pi: the range is [-pi, pi)") {
+    import spark.implicits._
+    // phi(-x axis) = atan2(0, -1) = pi exactly, phi(+x axis) = 0
+    val d = Seq((Pmu(-1, 0, 0, 1), Pmu(1, 0, 0, 1))).toDF("a", "b")
+      .select(Kinematics.deltaPhi(col("a"), col("b")),
+        Kinematics.deltaPhi(col("b"), col("a")))
+      .collect().head
+    assert(d.getDouble(0) == -math.Pi)
+    assert(d.getDouble(1) == -math.Pi)
+  }
+
+  test("deltaR equals plain Scala on a few 4-vectors") {
+    import spark.implicits._
+    def eta(p: Pmu): Double = {
+      val pt = math.hypot(p.x, p.y)
+      math.log(p.z / pt + math.sqrt(p.z * p.z / (pt * pt) + 1))
+    }
+    def dR(a: Pmu, b: Pmu): Double = {
+      var dphi = math.atan2(a.y, a.x) - math.atan2(b.y, b.x)
+      while (dphi >= math.Pi) dphi -= 2 * math.Pi
+      while (dphi < -math.Pi) dphi += 2 * math.Pi
+      math.hypot(eta(a) - eta(b), dphi)
+    }
+    val pairs = Seq(
+      (Pmu(1, 2, 3, 10), Pmu(-2, 1, -0.5, 10)),
+      (Pmu(math.cos(3.0), math.sin(3.0), 0.4, 5), // across the -pi/pi seam
+        Pmu(math.cos(-3.0), math.sin(-3.0), -1.2, 5)),
+      (Pmu(-1, 0, 2, 5), Pmu(1, 0, -2, 5)), // back to back: dphi = pi
+      (Pmu(3, 4, 0, 6), Pmu(3, 4, 5, 9))) // same phi
+    val got = pairs.toDF("a", "b")
+      .select(Kinematics.deltaR(col("a"), col("b")))
+      .collect().map(_.getDouble(0)).toSeq
+    assert(got.length == pairs.length)
+    for (((a, b), r) <- pairs.zip(got))
+      assert(r === dR(a, b) +- 1e-9, s"$a $b")
+  }
+
   test("summed system mass: Z -> mu+ mu- back-to-back") {
     import spark.implicits._
     val mz = 91.1876

@@ -86,13 +86,28 @@ class HepPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("event key format is total and consistent with chunk addressing") {
-    for (seed <- 1L to 50L) {
-      val (evt, cpk) = sample(
-        Gen.zip(Gen.choose(0L, 100000L), Gen.oneOf(10, 100, 1000, 5000)), seed)
-      val key = Keys.eventKey(evt, cpk)
-      assert(key.startsWith("evt-"))
-      assert(key.drop(4).toLong == evt % cpk)
-      assert(Keys.chunkOf(evt, cpk) == evt / cpk)
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val evts = (1L to 50L).map(seed => sample(Gen.choose(0L, 100000L), seed))
+    for (cpk <- Seq(1, 7, 10, 100, 1000, 5000)) {
+      for (evt <- evts) {
+        val key = Keys.eventKey(evt, cpk)
+        assert(key.startsWith("evt-"))
+        assert(key.drop(4).toLong == evt % cpk)
+        // fixed width: as many digits as the largest in-chunk number
+        assert(key.drop(4).length == (cpk - 1).toString.length, key)
+        assert(Keys.chunkOf(evt, cpk) == evt / cpk)
+      }
+      // the Column forms agree with the Scala forms row for row
+      val rows = evts.map(e => (e, Keys.chunkOf(e, cpk))).toDF("evt", "chunk")
+        .select(col("evt"), col("chunk"), Keys.eventKeyCol(col("evt"), cpk),
+          Keys.chunkKeyCol(col("chunk")))
+        .collect()
+      assert(rows.length == evts.length)
+      for (r <- rows) {
+        assert(r.getString(2) == Keys.eventKey(r.getLong(0), cpk), s"cpk=$cpk")
+        assert(r.getString(3) == Keys.chunkKey(r.getLong(1)), s"cpk=$cpk")
+      }
     }
   }
 }

@@ -275,6 +275,8 @@ class HepRoundTripSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Keys.eventKey(1234, 1000) == "evt-234")
     assert(Keys.chunkKey(3) == "evt-set-000003")
     assert(Keys.eventKey(5, 10) == "evt-5")
+    assert(Keys.eventKey(41, 1) == "evt-0") // `:00d` still prints a digit
+    assert(Keys.eventKey(7, 5000) == "evt-0007")
     assert(Keys.chunkOf(1234, 1000) == 1)
   }
 
@@ -506,6 +508,36 @@ class HepRoundTripSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.write(java.nio.file.Paths.get(s"$d/_meta.json"), "{}".getBytes)
     val e2 = intercept[IllegalArgumentException] { new HepReader(spark, d) }
     assert(e2.getMessage.contains("never finalized"), e2.getMessage)
+  }
+
+  test("a writer refuses evtsPerChunk below 1; at 1 every event is evt-0") {
+    val d = dir + "-cpk"
+    for (cpk <- Seq(0, -1)) {
+      val e = intercept[IllegalArgumentException] {
+        new HepWriter(spark, d, evtsPerChunk = cpk)
+      }
+      assert(e.getMessage.contains(s"got $cpk"), e.getMessage)
+      assert(!new java.io.File(d).exists())
+    }
+    val w = new HepWriter(spark, d, evtsPerChunk = 1)
+    val p = w.newProcess("x")
+    for (n <- 1 to 3) p.commitEvent(p.newEvent().setPdg(Array.fill(n)(11)))
+    w.close()
+    val x = new HepReader(spark, d).process("x")
+    assert((0 until 3).map(n => x.event(n).name) == Seq("evt-0", "evt-0", "evt-0"))
+    assert((0 until 3).map(n => x.event(n).count) == Seq(1L, 2L, 3L))
+  }
+
+  test("a sidecar whose evts_per_chunk is 0 is refused") {
+    val d = dir + "-cpk0"
+    writeBare(d, "x", Seq(2, 3))
+    val meta = java.nio.file.Paths.get(s"$d/_meta.json")
+    val text = new String(Files.readAllBytes(meta))
+    assert(text.contains("\"evts_per_chunk\":10"), text)
+    Files.delete(java.nio.file.Paths.get(s"$d/._meta.json.crc"))
+    Files.write(meta, text.replace("\"evts_per_chunk\":10", "\"evts_per_chunk\":0").getBytes)
+    val e = intercept[IllegalArgumentException] { new HepReader(spark, d) }
+    assert(e.getMessage.contains("evts_per_chunk = 0"), e.getMessage)
   }
 
   test("a flush that spans two chunks writes each event under its own chunk") {

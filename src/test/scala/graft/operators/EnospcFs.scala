@@ -83,7 +83,7 @@ object EnospcFs {
       throw new IOException(s"Transient read failure (injected): $f")
 
   /** Fault lane for RENAME — the commit point of every staged-publish
-    * protocol (pointer flip fallback arm, AvroStore's staging rename).
+    * protocol (the pointer flip's fallback arm).
     * A rename that dies must fail the publish loudly and leave the
     * previous state readable, never a half-committed mix.
     */

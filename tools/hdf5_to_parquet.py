@@ -71,7 +71,7 @@ PROCESSES_SCHEMA = pa.schema([
     ("in_pcls", pa.list_(pa.int32())), ("out_pcls", pa.list_(pa.int32()))])
 
 # process-group attr names with first-class columns; everything else
-# JSON-encodes into custom_meta (graft.hep.MetaCodec convention)
+# goes into custom_meta as a string (see _meta_str)
 _PROC_ATTRS = {"process", "signal_pdgs", "com_e", "e_unit", "num_evts",
                "in_pcls", "out_pcls", "custom_meta_keys", "mask_keys",
                "custom_keys"}
@@ -82,7 +82,7 @@ def _is_group(node):
 
 
 def _meta_str(value):
-    """MetaCodec convention: strings pass through, the rest JSON-encodes."""
+    """custom_meta value: strings pass through, the rest JSON-encodes."""
     if isinstance(value, str):
         return value
     if isinstance(value, bytes):
