@@ -11,7 +11,7 @@ import org.apache.spark.paths.SparkPath
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeSet, Expression, JoinedRow, Literal, NamedExpression, Predicate, SubqueryExpression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeSeq, AttributeSet, BindReferences, Expression, InterpretedUnsafeProjection, JoinedRow, Literal, NamedExpression, Predicate, SubqueryExpression}
 import org.apache.spark.sql.catalyst.planning.PhysicalOperation
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
@@ -103,12 +103,20 @@ private[hep] object HepLookup extends SparkStrategy {
   * `VectorizedParquetRecordReader` read row by row, with the partition
   * values appended, wherever `supportBatch` covers the columns, otherwise
   * parquet-mr's `ParquetRecordReader` with Spark's `ParquetReadSupport`.
-  * Every filter of the matched stack is then evaluated on each row and
-  * the projection applied. `executeCollect`, `executeTake` and
-  * `executeTail` start no Spark job; under another operator `doExecute`
-  * hands the same rows on as a one-partition RDD. Nothing is read before
-  * execution, so a lookup DataFrame stays lazy, and session settings are
-  * read at every execution. The relation and the directory stay on the
+  * The stack's filters other than its `partitionFilters` are then
+  * evaluated on each row and the projection applied: the partition
+  * filters already chose the directory ([[HepChunkIndex.listFiles]]
+  * evaluates every one of them on its partition values), so no row
+  * re-checks `process` or `chunk`, while a filter that mixes a partition
+  * and a data column is evaluated on every row. Both are interpreted
+  * (`InterpretedPredicate`, `InterpretedUnsafeProjection`), so a lookup
+  * generates and compiles no code: for one chunk's rows that costs more
+  * than it saves, at 1000 events per chunk too (BASELINE.md).
+  * `executeCollect`, `executeTake` and `executeTail` start no Spark job;
+  * under another operator `doExecute` hands the same rows on as a
+  * one-partition RDD. Nothing is read before execution, so a lookup
+  * DataFrame stays lazy, and session settings are read at every
+  * execution. The relation and the directory stay on the
   * driver (`@transient`, as in `FileSourceScanExec`): no task ever reads
   * them. `numFiles`, `filesSize`, `rowsDecoded` (rows the parquet reader
   * returned, before the stack's filters) and `numOutputRows` are posted
@@ -136,11 +144,16 @@ private[hep] final case class HepLookupExec(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
 
   /** The Hadoop conf of one read, set up as Spark's parquet reader sets
-    * up the conf it broadcasts to its tasks.
+    * up the conf it broadcasts to its tasks. It holds what
+    * `newHadoopConfWithOptions` would (the context's Hadoop conf, the
+    * session's SQL settings, the relation's options) in one copy, a
+    * `JobConf`, which `TaskAttemptContextImpl` takes without copying.
     */
   private def readConf(session: classic.SparkSession): JobConf = {
     val sqlConf = session.sessionState.conf
-    val conf = new JobConf(session.sessionState.newHadoopConfWithOptions(relation.options))
+    val conf = new JobConf(session.sparkContext.hadoopConfiguration)
+    for ((k, v) <- sqlConf.getAllConfs if v != null) conf.set(k, v)
+    for ((k, v) <- relation.options if v != null && k != "path" && k != "paths") conf.set(k, v)
     val requested = DataTypeUtils.fromAttributes(dataColumns).json
     conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
     conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requested)
@@ -164,15 +177,20 @@ private[hep] final case class HepLookupExec(
     val rows = ArrayBuffer.empty[InternalRow]
     var decoded = 0L
     if (files.nonEmpty) {
-      val input = dataColumns ++ partitionColumns
-      val keep = Predicate.create(filters.reduceOption(And).getOrElse(Literal.TrueLiteral), input)
-      val project = UnsafeProjection.create(projects, input)
+      val input = AttributeSeq(dataColumns ++ partitionColumns)
+      val rowFilters = filters.filterNot(partitionFilters.contains)
+      val keep = Predicate.createInterpreted(BindReferences.bindReference(
+        rowFilters.reduceOption(And).getOrElse(Literal.TrueLiteral), input))
+      keep.initialize(0)
+      val project =
+        InterpretedUnsafeProjection.createProjection(BindReferences.bindReferences(projects, input))
+      project.initialize(0)
       val session = relation.sparkSession.asInstanceOf[classic.SparkSession]
       val sqlConf = session.sessionState.conf
       val conf = readConf(session)
       val options = new ParquetOptions(relation.options, sqlConf)
       // the decoder Spark's scan picks: the vectorized one wherever it covers the columns
-      val vectorized = relation.fileFormat.supportBatch(session, DataTypeUtils.fromAttributes(input))
+      val vectorized = relation.fileFormat.supportBatch(session, DataTypeUtils.fromAttributes(input.attrs))
       val values = dir.get.values
       val joined = new JoinedRow
       for (f <- files) {

@@ -2,7 +2,10 @@ package graft.hep
 
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftaccess.{PlanDatasets, SetAnalyzed}
 import Schemas._
 
 /** Read path of the hep facade (reference S1-S6 / P1-P16, `read/hdf.py`).
@@ -27,6 +30,21 @@ import Schemas._
   * larger one (a process scan, an oversized custom dataset) plans the
   * ordinary parquet scan. The strategy is installed on the session when
   * the reader opens its first table.
+  *
+  * An [[EventReader]] accessor builds its plan from resolved nodes and
+  * runs no analyzer on it: a `Filter` of `process = p AND chunk = c AND
+  * event_id = n` (and `fin = true` for [[EventReader.finalParticles]],
+  * `name = x` for [[EventReader.custom]]) straight over the member
+  * table's own analyzed relation, each condition an equality between the
+  * relation's attribute and a literal of that attribute's type, and for
+  * the column-pick accessors a `Project` of the relation's attributes on
+  * top. The tree is marked analyzed and wrapped in a Dataset as it is, so
+  * only what a caller adds on top is analyzed. [[EventReader.mask]]
+  * (its element lookup) and [[EventReader.custom]] over a store written
+  * before the typed columns (its literal columns) add theirs through the
+  * ordinary API, one analyzer run each. A chunk outside INT range, which
+  * no directory can hold, is a `false` condition: the optimizer turns the
+  * lookup into an empty local relation.
   *
   * The `_meta.json` sidecar is the store's commit marker: every producer
   * writes it last ([[HepWriter.close]], `tools/hdf5_to_parquet.py`), as
@@ -163,11 +181,11 @@ final class HepReader(spark: SparkSession, path: String) {
     private def inProc(df: DataFrame): DataFrame =
       df.where(col("process") === meta.process)
 
-    /** Member table `name` of this process, opened from `chunk` if this
-      * opens it.
+    /** Member table `name`'s analyzed relation, opened from this process's
+      * `chunk` if this opens it.
       */
-    private[HepReader] def inChunk(name: String, chunk: Long): DataFrame =
-      inProc(table(name, Some(meta.process -> chunk)))
+    private[HepReader] def relation(name: String, chunk: Long): LogicalPlan =
+      table(name, Some(meta.process -> chunk)).queryExecution.analyzed
 
     /** All particle rows of this process (unordered scan). */
     def particles: DataFrame = inProc(table(ParticlesTable))
@@ -191,20 +209,47 @@ final class HepReader(spark: SparkSession, path: String) {
   final class EventReader private[HepReader] (
       proc: ProcessReader, val eventId: Long, chunk: Long) {
 
-    private def slice(name: String): DataFrame = proc.inChunk(name, chunk)
-      .where(col("chunk") === chunk && col("event_id") === eventId)
+    /** The attribute of `plan`'s output named `column`. */
+    private def attr(plan: LogicalPlan, column: String): Attribute =
+      plan.output.find(_.name == column).getOrElse(throw new IllegalArgumentException(
+        s"$path: a member table has no column $column"))
+
+    /** The event's rows of member table `name` whose `also` columns equal
+      * their values, as one filter over the table's relation.
+      */
+    private def slice(name: String, also: (String, Any)*): LogicalPlan = {
+      val rel = proc.relation(name, chunk)
+      def is(column: String, value: Any) = {
+        val a = attr(rel, column)
+        EqualTo(a, Literal.create(value, a.dataType))
+      }
+      val inChunk = if (chunk.isValidInt) is("chunk", chunk.toInt) else Literal.FalseLiteral
+      val conditions = Seq(is("process", proc.meta.process), inChunk, is("event_id", eventId)) ++
+        also.map { case (c, v) => is(c, v) }
+      Filter(conditions.reduce(And), rel)
+    }
+
+    /** `plan`, built from resolved nodes, as a DataFrame that analyzes nothing. */
+    private def rows(plan: LogicalPlan): DataFrame = PlanDatasets.ofRows(spark, SetAnalyzed(plan))
+
+    /** `columns` of `plan`. */
+    private def pick(plan: LogicalPlan, columns: String*): DataFrame =
+      rows(Project(columns.map(attr(plan, _)), plan))
+
+    private def particlesPick(column: String): DataFrame =
+      pick(slice(ParticlesTable), "idx", column)
 
     /** The event's particle table slice (all columns, pruned on use). */
-    def particles: DataFrame = slice(ParticlesTable)
+    def particles: DataFrame = rows(slice(ParticlesTable))
 
-    def pmu: DataFrame = particles.select(col("idx"), col("pmu"))
-    def pdg: DataFrame = particles.select(col("idx"), col("pdg"))
-    def status: DataFrame = particles.select(col("idx"), col("status"))
-    def helicity: DataFrame = particles.select(col("idx"), col("helicity"))
-    def colorCol: DataFrame = particles.select(col("idx"), col("color"))
+    def pmu: DataFrame = particlesPick("pmu")
+    def pdg: DataFrame = particlesPick("pdg")
+    def status: DataFrame = particlesPick("status")
+    def helicity: DataFrame = particlesPick("helicity")
+    def colorCol: DataFrame = particlesPick("color")
 
     /** The `final` mask (reference `read/hdf.py:318-321`). */
-    def finalMask: DataFrame = particles.select(col("idx"), col("fin"))
+    def finalMask: DataFrame = particlesPick("fin")
 
     /** A named extra mask (`masks[name]`). */
     def mask(name: String): DataFrame =
@@ -212,13 +257,13 @@ final class HepReader(spark: SparkSession, path: String) {
         coalesce(element_at(col("masks"), name), lit(false)).as(name))
 
     /** Final-state particles only — `pmu[masks['final']]` semantics. */
-    def finalParticles: DataFrame = particles.where(col("fin"))
+    def finalParticles: DataFrame = rows(slice(ParticlesTable, "fin" -> true))
 
-    def edges: DataFrame = slice(EdgesTable).select("src", "dst", "weight")
+    def edges: DataFrame = pick(slice(EdgesTable), "src", "dst", "weight")
 
     /** `num_pcls` from the events summary (attr, not a scan — P8). */
     def count: Long = {
-      val r = slice(EventsTable).select("num_pcls").collect()
+      val r = pick(slice(EventsTable), "num_pcls").collect()
       if (r.isEmpty) 0L else r.head.getLong(0)
     }
 
@@ -231,17 +276,16 @@ final class HepReader(spark: SparkSession, path: String) {
       * typed columns existed surface them as empty arrays.
       */
     def custom(name: String): DataFrame = {
-      var df = slice(CustomTable).where(col("name") === name)
-      if (!df.columns.contains("dtype"))
-        df = df.withColumn("dtype", lit("f8"))
-          .withColumn("values_long", typedLit(Seq.empty[Long]))
-          .withColumn("values_2d", typedLit(Seq.empty[Seq[Double]]))
-      df.select("values", "values_long", "values_2d", "dtype")
+      val plan = slice(CustomTable, "name" -> name)
+      if (plan.output.exists(_.name == "dtype"))
+        pick(plan, "values", "values_long", "values_2d", "dtype")
+      else rows(plan).select(col("values"), typedLit(Seq.empty[Long]).as("values_long"),
+        typedLit(Seq.empty[Seq[Double]]).as("values_2d"), lit("f8").as("dtype"))
     }
 
     /** Event custom metadata. */
     def customMeta: Map[String, String] = {
-      val r = slice(EventsTable).select("custom_meta").collect()
+      val r = pick(slice(EventsTable), "custom_meta").collect()
       if (r.isEmpty) Map.empty
       else r.head.getMap[String, String](0).toMap
     }

@@ -252,4 +252,100 @@ class HepLookupSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(withConf("spark.sql.parquet.enableVectorizedReader", "false")(lookup()) ==
       ((want, pushedDecoded)))
   }
+
+  test("an accessor's own plan runs no analyzer rule before an action") {
+    val r = new HepReader(spark, store)
+    def rules(df: DataFrame): Seq[String] = df.queryExecution.tracker.rules.keys.toSeq.sorted
+    for (open <- Seq(false, true); n <- Seq(4L, 7L)) {
+      // the first pass opens the member tables from the lookup, the second reuses them
+      val ev = r.process(Procs.last).event(n)
+      val accessors = Seq[(String, DataFrame)](
+        "particles" -> ev.particles, "pmu" -> ev.pmu, "pdg" -> ev.pdg,
+        "status" -> ev.status, "helicity" -> ev.helicity, "colorCol" -> ev.colorCol,
+        "finalMask" -> ev.finalMask, "finalParticles" -> ev.finalParticles,
+        "edges" -> ev.edges, "custom(wgt)" -> ev.custom("wgt"),
+        "custom(absent)" -> ev.custom("absent"))
+      for ((what, df) <- accessors)
+        assert(rules(df).isEmpty, s"open=$open $n $what ran ${rules(df).mkString(", ")}")
+      // the probe sees an analyzer run: mask's element lookup goes through the ordinary API
+      assert(rules(ev.mask("signal")).exists(_.contains(".analysis.")), s"$n mask")
+      // the caller's own select is analyzed, over the accessor's analyzed plan
+      val picked = ev.finalParticles.select("idx", "pdg")
+      assert(sorted(picked.collect()) == sorted(plain(ParticlesTable, Procs.last, n)
+        .where(col("fin")).select("idx", "pdg").collect()), s"$n select")
+    }
+  }
+
+  test("an event id whose chunk is out of INT range, or negative, returns no rows and no job") {
+    val d = root.resolve("perone").toString
+    val w = new HepWriter(spark, d, evtsPerChunk = 1)
+    val p = w.newProcess("one")
+    for (e <- 0 until 3) {
+      val b = p.newEvent()
+      b.setPdg(Array(11 + e, 13)).setMask("final", Array(true, e % 2 == 0))
+      b.setEdges(Array((0, 1)))
+      b.setCustom("wgt", Array(0.5, e.toDouble))
+      b.setCustomMeta("note", s"one-$e")
+      p.commitEvent(b)
+    }
+    w.close()
+    def all(ev: HepReader#EventReader): Seq[Array[Row]] =
+      Seq(ev.particles, ev.pdg, ev.finalParticles, ev.mask("final"), ev.edges, ev.custom("wgt"))
+        .map(_.collect())
+    for (id <- Seq((1L << 31) + 5, -1L); opened <- Seq(false, true)) {
+      val r = new HepReader(spark, d)
+      if (opened) all(r.process("one").event(1)) // opens the member tables
+      val j0 = jobs()
+      val ev = r.process("one").event(id)
+      assert(all(ev).forall(_.isEmpty), s"event $id")
+      assert(ev.count == 0L && ev.customMeta.isEmpty, s"event $id")
+      assert(jobs() - j0 == 0, s"a lookup of event $id started ${jobs() - j0} jobs")
+    }
+    // the same reader returns an event inside the store
+    val ev = new HepReader(spark, d).process("one").event(2)
+    assert(ev.pdg.collect().map(_.getInt(1)).sorted.toSeq == Seq(13, 13))
+    assert(ev.count == 2L && ev.customMeta == Map("note" -> "one-2"))
+  }
+
+  test("a filter that mixes a partition and a data column returns the parquet rows") {
+    val r = new HepReader(spark, store)
+    // event 2 sits in chunk 0, where every row passes; event 7 in chunk 1,
+    // where only its pdg 19 row does. An IN, not an equality: the optimizer
+    // substitutes the lookup's `chunk = c` into comparisons only, which
+    // would turn `chunk === 0 || pdg === 19` into a data-only filter
+    val mixed = col("chunk").isin(0, 5) || col("pdg") === 19
+    for (p <- Procs; (n, some) <- Seq(2L -> false, 7L -> true)) {
+      val df = r.process(p).event(n).particles.where(mixed)
+      val l = lookups(df.queryExecution.executedPlan)
+      assert(l.size == 1, s"$p/$n")
+      // the lookup evaluates the mixed filter on every row
+      assert(l.head.filters.exists(f => !l.head.partitionFilters.contains(f) &&
+        f.references.exists(_.name == "chunk") && f.references.exists(_.name == "pdg")), s"$p/$n")
+      val want = plain(ParticlesTable, p, n)
+      val got = sorted(df.collect())
+      assert(got == sorted(want.where(mixed).collect()), s"$p/$n")
+      val all = want.count()
+      assert(got.nonEmpty && (if (some) got.size < all else got.size == all), s"$p/$n")
+    }
+  }
+
+  test("custom over a store written before the typed columns surfaces them empty") {
+    // the store with its custom table rewritten in the old layout: no dtype,
+    // values_long or values_2d
+    val d = root.resolve("untyped").toString
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(store), new java.io.File(d))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$d/$CustomTable"))
+    spark.read.parquet(s"$store/$CustomTable").select("event_id", "name", "values", "process", "chunk")
+      .write.partitionBy("process", "chunk").parquet(s"$d/$CustomTable")
+    val r = new HepReader(spark, d)
+    for (p <- Procs; n <- Seq(0L, 7L)) {
+      val got = r.process(p).event(n).custom("wgt")
+      assert(got.columns.toSeq == Seq("values", "values_long", "values_2d", "dtype"))
+      val want = plain(CustomTable, p, n).where(col("name") === "wgt").select("values").collect()
+      val rows = got.collect()
+      assert(rows.map(_.getSeq[Double](0)).toSeq == want.map(_.getSeq[Double](0)).toSeq, s"$p/$n")
+      assert(rows.forall(row => row.getSeq[Long](1).isEmpty && row.getSeq[Seq[Double]](2).isEmpty &&
+        row.getString(3) == "f8"), s"$p/$n")
+    }
+  }
 }

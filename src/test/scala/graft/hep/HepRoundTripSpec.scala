@@ -301,7 +301,7 @@ class HepRoundTripSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"got ${after - before}")
   }
 
-  test("an opened reader: process() starts no job, a lookup exactly one") {
+  test("an opened reader: process() starts no job, a lookup none") {
     val r = new HepReader(spark, dir)
     r.process("higgs").event(7).finalParticles.collect() // opens the tables
     val j0 = jobs()
